@@ -184,6 +184,14 @@ def jaccard_pairs(
     The gram-explode self-join is quadratic in bucket size — at scale
     this runs ONLY over LSH candidates (minhash_lsh_candidates), here
     also standalone as the small-scale oracle-checkable operator.
+
+    Hot-gram bound: a gram shared by k documents is one group, so it
+    emits k·(k−1)/2 pairs — and holds its k-member list — inside a
+    single task. Nothing here caps k: a boilerplate gram shared by
+    many documents concentrates that quadratic output on one executor.
+    Only the LSH verify path bounds k, through ``max_bucket``
+    (minhash_lsh_candidates / cap_buckets); the same trade-off is
+    why simhash_near_dups keeps its bucket self-join.
     """
     g = df.select(
         F.col(id_col).alias("doc_id"),
@@ -245,12 +253,6 @@ def minhash_signature_from(ghs: Column, k: int = MINHASH_K) -> Column:
         )
         for a, b in PERMS[:k]
     ])
-
-
-def minhash_signature(text: Column, k: int = MINHASH_K) -> Column:
-    """Single-expression form (k× shingling cost — prefer the two-step
-    minhash_signature_from in pipelines)."""
-    return minhash_signature_from(gram_hashes(text), k)
 
 
 def minhash_signatures(

@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from img_spark.functions.extract import extract_second_level, parse_page
+from img_spark.operators.urlexprs import batch_buckets
 
 EXTRACT_SCHEMA = (
     "url string, status string, title string, dir_title string,"
@@ -233,13 +234,7 @@ def resolve_second_level(
             from img_spark.sources.tables import PAGES_BUCKET_COL
 
             t_eager0 = _time.time()
-            mods = [
-                r["b"]
-                for r in exploded.select(
-                    F.pmod(F.xxhash64(F.col("fetch_url")), F.lit(pages_buckets))
-                    .cast("int").alias("b")
-                ).distinct().collect()
-            ]
+            mods = batch_buckets(exploded, "fetch_url", pages_buckets)
             if eager_timer is not None:
                 # an eager Spark job inside the caller's plan window —
                 # report it so Crawler step_times' plan/eager split

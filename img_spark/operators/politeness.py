@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from img_spark.operators.urlexprs import url_bucket
+
 ROBOTS_DDL = "host string, path_prefix string, allow boolean, crawl_delay double"
 
 
@@ -532,9 +534,7 @@ def dispatch_top_k_salted(
         _, prep0 = _host_budget_col(host_budget, host_budgets)
         pending = prep0(pending)  # carries __hb through phase 1
         budget_cap = F.coalesce(F.col("__hb"), F.lit(host_budget))
-    salted = pending.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salts))
-    )
+    salted = pending.withColumn("__salt", url_bucket(F.col("url"), salts))
     w1 = Window.partitionBy("host", "__salt").orderBy(*keys)
     # ONE ranked subtree feeds both branches at the DataFrame level;
     # physically they still plan separately ON PURPOSE — see the

@@ -37,14 +37,9 @@ def tokens(text: Column) -> Column:
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count (BPE-ish subword estimate is
-    ``ceil(chars/4)``; see ``token_estimate``)."""
+    """Whitespace token count (the BPE-ish subword count is
+    ``token_count_bpe_regex``)."""
     return F.size(tokens(text))
-
-
-def token_estimate_bpe(text: Column) -> Column:
-    """Cheap BPE-budget estimate: ~4 chars per subword token."""
-    return F.ceil(F.length(F.trim(text)) / F.lit(4.0)).cast("long")
 
 
 # GPT2-style pre-tokenizer shape, restricted to constructs RE2 (DuckDB)

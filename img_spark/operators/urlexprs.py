@@ -13,7 +13,33 @@ main.rs:501-523, filename main.rs:583-614.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def url_hash(url: Column) -> Column:
+    """THE url hash (long): the seen filter's h64 and every url bucket
+    and salt derive from it, so two sites that must agree (the seen
+    salt and the hash the seen blobs are keyed by; a stored bucket
+    column and the bucket list a later scan prunes on) cannot
+    drift."""
+    return F.xxhash64(url)
+
+
+def url_bucket(url: Column, n: int) -> Column:
+    """``pmod(url_hash(url), n)`` as long; stored bucket columns cast
+    it to int."""
+    return F.pmod(url_hash(url), F.lit(n))
+
+
+def batch_buckets(df: DataFrame, col: str, n: int) -> list:
+    """Distinct int url buckets of a (small, batch-sized) DataFrame —
+    one eager job; the list becomes an ``isin`` filter that prunes a
+    bucketed scan to the files the batch's URLs can live in."""
+    return [
+        r["b"] for r in df.select(
+            url_bucket(F.col(col), n).cast("int").alias("b")
+        ).distinct().collect()
+    ]
 
 
 def _scheme_rest(url: Column):

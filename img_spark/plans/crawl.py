@@ -66,7 +66,12 @@ from img_spark.operators.politeness import (
     robots_compact,
 )
 from img_spark.operators.seen import CuckooFilter
-from img_spark.operators.urlexprs import host_of
+from img_spark.operators.urlexprs import (
+    batch_buckets,
+    host_of,
+    url_bucket,
+    url_hash,
+)
 from img_spark.sources.site_config import attach_site_config
 
 FRONTIER_DDL = (
@@ -105,72 +110,190 @@ STATUSES = (
 )
 
 # per-URL fetch validators + revisit clock (revisit_after_s>0): one
-# delta dir per generation under {checkpoint}/validators/, newest row
-# per URL wins. depth/path ride along so a revisit re-enqueue can
-# reconstruct the frontier row; vb = pmod(xxhash64(url),
-# VALIDATORS_BUCKETS) is written one-bucket-per-file (repartition by
-# vb) so the per-generation dispatch attach prunes row groups on
-# parquet min/max stats instead of scanning the whole store.
+# DeltaStore delta per generation under {checkpoint}/validators/,
+# newest row per URL wins. depth/path ride along so a revisit
+# re-enqueue can reconstruct the frontier row; ``vb`` is the store's
+# url bucket (see DeltaStore).
 VALIDATORS_DDL = (
     "url string, host string, depth int, path string, etag string,"
     " last_modified string, fetched_at double, interval_s double, vb int"
 )
-# the vb modulus is a STORE constant, deliberately independent of
-# cfg.partitions: stored rows keep their bucket across resumes, so a
-# crawl resumed with a different --partitions still prunes correctly
-# (a cfg-derived modulus would silently exclude stored rows from the
-# dispatch attach and every revisit would refetch unconditionally)
 VALIDATORS_BUCKETS = 64
 
 # media-seen store (CrawlConfig.media_dir): membership set of every
 # media URL a generation has ATTEMPTED (fetched or definitively
 # failed — failures must not retry on every later page that embeds
 # them), bucketed like the validators store so per-generation
-# dedup scans prune to the batch's url-hash buckets. Same
-# manifest-gated visibility contract: a delta is live only once a
-# manifest records ``media_seen_max`` ≥ its index, so a crash between
-# the archive write and the manifest commit re-fetches (and
-# re-archives — the g{g} dir is overwritten) instead of silently
-# skipping media whose archive never committed.
+# dedup scans prune to the batch's url buckets.
 MEDIA_SEEN_DDL = "url string, vb int"
 MEDIA_SEEN_BUCKETS = 64
 
 
-def _delta_store_dirs(base: str, committed: int, all_dirs: bool = False):
-    """Committed delta dirs of a manifest-gated store (validators,
-    media-seen): d{N} dirs with a _SUCCESS marker, hiding indexes
-    above the committed floor unless they carry the _COMPACTED
-    exemption. ONE implementation for every store — the
-    visibility/crash contract is subtle enough that two copies would
-    drift."""
-    out = []
-    for fn in fsio.listdir(base):
-        if not (
-            fn.startswith("d") and fn[1:].isdigit()
-            and fsio.exists(fsio.join(base, fn, "_SUCCESS"))
-        ):
-            continue
-        idx, path = int(fn[1:]), fsio.join(base, fn)
-        if (
-            not all_dirs
-            and idx > committed
-            and not fsio.exists(fsio.join(path, "_COMPACTED"))
-        ):
-            continue  # written but never manifest-committed
-        out.append((idx, path))
-    return sorted(out)
+class DeltaStore:
+    """A log-structured checkpoint store under ``base``: each append
+    writes one ``d{N}`` delta dir, live once its ``_SUCCESS`` marker
+    exists; ``read`` unions the visible deltas, ``reduce`` folds them
+    to the live set and ``compact`` rewrites that set as one dir. The
+    crawl's three stores are instances: live robots (every rule row of
+    a host's newest fetch), fetch validators (newest row per URL) and
+    media-seen (distinct URLs). ONE implementation of the
+    visibility/crash contract — it is subtle enough that copies
+    drift.
 
+    Visibility, for a store with a ``manifest_key``: its deltas CHANGE
+    what a retried generation does — a crashed attempt's validators
+    would make first-visit pages come back 304 and never be extracted,
+    its media-seen rows would skip media whose archive never
+    committed. So a delta is visible only up to ``committed`` (the
+    highest index a committed generation produced), every manifest
+    records ``committed`` under ``manifest_key`` in the generation's
+    atomic commit, and ``resume`` deletes the indexes above the
+    recorded floor. A compaction output carries ``_COMPACTED`` (written
+    before ``_SUCCESS``, so a committed fold is never unmarked), which
+    exempts it from the gate and from the resume prune: it may
+    legitimately postdate the last manifest. Hence compaction runs only
+    AFTER a generation's manifest commit — before it, the fold would
+    smuggle the uncommitted delta past the gate. A store without a
+    ``manifest_key`` (live robots: re-fetched rules are idempotent)
+    shows every committed delta and ``resume`` leaves it alone.
 
-def _prune_store_orphans(dirs: list, committed: int) -> None:
-    """Delete a store's never-manifest-committed delta dirs (resume
-    contract: a retried generation must not see a crashed attempt's
-    state). Compaction outputs are exempt — they may legitimately
-    postdate the last manifest."""
-    for idx, p in dirs:
-        if idx > committed and not fsio.exists(
-            fsio.join(p, "_COMPACTED")
-        ):
+    ``buckets`` > 0: rows get ``vb`` = url_bucket(url, buckets) and are
+    written one bucket per file, so ``read(batch=...)`` prunes row
+    groups on parquet min/max stats to the batch's buckets. The modulus
+    is a STORE constant, independent of cfg.partitions: stored rows
+    keep their bucket across resumes, so a crawl resumed with another
+    --partitions still prunes correctly."""
+
+    # auto-compaction threshold in committed delta dirs (maybe_compact)
+    compact_dirs = 64
+
+    def __init__(self, spark, base, ddl, reduce, buckets=0,
+                 manifest_key=None):
+        self.spark, self.base, self.ddl = spark, base, ddl
+        self.reduce = reduce
+        self.buckets = buckets
+        self.manifest_key = manifest_key
+        self.committed = -1
+
+    @staticmethod
+    def _compacted(path: str) -> bool:
+        return fsio.exists(fsio.join(path, "_COMPACTED"))
+
+    def dirs(self, all_dirs: bool = False) -> list:
+        """Committed delta dirs as sorted (index, path). A gated store
+        hides indexes above ``committed`` that are not compaction
+        outputs, unless ``all_dirs``."""
+        gated = self.manifest_key is not None and not all_dirs
+        out = []
+        for fn in fsio.listdir(self.base):
+            if not (
+                fn.startswith("d") and fn[1:].isdigit()
+                and fsio.exists(fsio.join(self.base, fn, "_SUCCESS"))
+            ):
+                continue  # a crash mid-write must not feed partial rows
+            idx, path = int(fn[1:]), fsio.join(self.base, fn)
+            if gated and idx > self.committed and not self._compacted(path):
+                continue  # written but never manifest-committed
+            out.append((idx, path))
+        return sorted(out)
+
+    def read(self, batch: DataFrame | None = None) -> DataFrame | None:
+        """Raw rows of every visible delta (None when there are none);
+        with ``batch``, only the slice in the batch's url buckets (one
+        eager bucket collect)."""
+        dirs = self.dirs()
+        if not dirs:
+            return None
+        df = self.spark.read.schema(self.ddl).parquet(*[p for _, p in dirs])
+        if batch is not None:
+            df = df.filter(
+                F.col("vb").isin(batch_buckets(batch, "url", self.buckets))
+            )
+        return df
+
+    def live(self) -> DataFrame | None:
+        """The reduced live set (None when the store is empty)."""
+        df = self.read()
+        return None if df is None else self.reduce(df)
+
+    def append(self, rows: DataFrame) -> int:
+        """Write one delta (rows without ``vb`` — added here); returns
+        its index. A gated delta stays invisible until the caller
+        advances ``committed`` to it."""
+        if self.buckets:
+            rows = rows.withColumn(
+                "vb", url_bucket(F.col("url"), self.buckets).cast("int")
+            )
+        return self._write(rows)
+
+    def _write(self, df: DataFrame, compacted: bool = False) -> int:
+        # the index comes from ALL dirs: an invisible orphan's index is
+        # never reused (overwrite would be safe, but distinct history is
+        # simpler to reason about)
+        dirs = self.dirs(all_dirs=True)
+        idx = dirs[-1][0] + 1 if dirs else 0
+        if self.buckets:
+            df = df.repartition(self.buckets, "vb")
+        out = fsio.join(self.base, f"d{idx}")
+        # the write is the one materializing action: consumers read the
+        # parquet, never the lineage
+        df.write.mode("overwrite").parquet(out)
+        if compacted:
+            fsio.write_bytes_atomic(fsio.join(out, "_COMPACTED"), b"")
+        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
+        return idx
+
+    def compact(self) -> bool:
+        """Fold the visible deltas into ONE dir (the reduced live set,
+        stamps preserved) and delete the folded dirs — a long crawl
+        appends a delta per generation that every read must list and
+        open. The merged dir commits before anything is deleted; a
+        crash in between only leaves rows the reduction collapses
+        again. Returns whether anything was folded."""
+        dirs = self.dirs()
+        if len(dirs) <= 1:
+            return False
+        idx = self._write(self.reduce(self.read()), compacted=True)
+        for _, p in dirs:
             fsio.rmtree(p)
+        self.committed = idx
+        return True
+
+    def maybe_compact(self) -> bool:
+        """Compact once the store passes ``compact_dirs`` deltas: a
+        growth bound independent of frontier compaction, so a
+        compact_every=0 crawl does not accumulate O(generations)
+        dirs."""
+        return len(self.dirs()) > self.compact_dirs and self.compact()
+
+    def resume(self, manifests) -> None:
+        """Restore ``committed`` from the first of ``manifests`` (the
+        resumed one, then older ones newest-first) that records
+        ``manifest_key``, then delete the never-committed deltas above
+        it. The walk-back matters: a crawl resumed for a while WITHOUT
+        the feature writes manifests lacking the key, and wiping the
+        older committed history would re-download or unconditionally
+        refetch everything. When no manifest ever recorded the key the
+        floor is -1: any delta found is a crashed first attempt's
+        orphan."""
+        key = self.manifest_key
+        if key is None:
+            return
+        self.committed = next((m[key] for m in manifests if key in m), -1)
+        for idx, p in self.dirs(all_dirs=True):
+            if idx > self.committed and not self._compacted(p):
+                fsio.rmtree(p)
+
+
+def _newest(key: str, one_row: bool):
+    """Store reduction: the rows of each ``key``'s newest
+    ``fetched_at``; ``one_row`` keeps one of them (a retried generation
+    appends duplicate rows with identical stamps)."""
+    def reduce(df: DataFrame) -> DataFrame:
+        newest = df.groupBy(key).agg(F.max("fetched_at").alias("fetched_at"))
+        out = df.join(newest, [key, "fetched_at"], "left_semi")
+        return out.dropDuplicates([key]) if one_row else out
+    return reduce
 
 
 def read_pending(spark: SparkSession, checkpoint_dir: str, generation: int) -> DataFrame:
@@ -311,7 +434,7 @@ class CrawlConfig:
     dispatch_salts: int = 0       # >0 ⇒ skew-safe two-phase dispatch
     compact_every: int = 0        # >0 ⇒ compact(prune=True) every N gens
     # >0 ⇒ the pages table carries tables.PAGES_BUCKET_COL
-    # (pmod(xxhash64(url), pages_buckets)) as a partition column and the
+    # (url_bucket(url, pages_buckets)) as a partition column and the
     # per-generation fetch scan is PRUNED to the dispatch batch's
     # buckets — without this every generation re-reads the full pages
     # table (the dominant cost at 100 TB)
@@ -420,10 +543,6 @@ class CrawlConfig:
 
 
 class Crawler:
-    # auto-compact the live-robots store once it exceeds this many
-    # committed delta dirs (see _ensure_robots)
-    _ROBOTS_COMPACT_DIRS = 64
-
     def __init__(
         self,
         spark: SparkSession,
@@ -489,9 +608,27 @@ class Crawler:
                 "media_dir requires fetch_mode='http' — a pages-table "
                 "crawl has no wire to download media bytes from"
             )
-        # highest MANIFEST-COMMITTED media-seen delta index (same
-        # visibility contract as the validators store)
-        self._media_committed: int = -1
+        # the checkpoint's log-structured stores (DeltaStore), each
+        # only when its feature is on; the gated ones ride every
+        # manifest and resume
+        self._robots_store = DeltaStore(
+            spark, self._p("robots"), ROBOTS_STORE_DDL,
+            _newest("host", one_row=False),
+        ) if self._live_robots else None
+        self._validators = DeltaStore(
+            spark, self._p("validators"), VALIDATORS_DDL,
+            _newest("url", one_row=True), buckets=VALIDATORS_BUCKETS,
+            manifest_key="validators_max",
+        ) if self._conditional else None
+        self._media_seen = DeltaStore(
+            spark, self._p("media_seen"), MEDIA_SEEN_DDL,
+            lambda df: df.dropDuplicates(["url"]),
+            buckets=MEDIA_SEEN_BUCKETS, manifest_key="media_seen_max",
+        ) if cfg.media_dir else None
+        self._gated_stores = [
+            st for st in (self._validators, self._media_seen)
+            if st is not None
+        ]
         # redirect_policy='strict' per-step state: parked cross-host
         # redirect targets (re-enqueued as candidates) and the fetch
         # caches backing them (unpersisted at end of step)
@@ -514,9 +651,6 @@ class Crawler:
         self._step_val_newest = None
         self._step_prev_intervals = None
         self._step_cond_batch = None
-        # highest MANIFEST-COMMITTED validators delta index (-1: none).
-        # Gates delta visibility; see the validators section.
-        self._validators_committed: int | None = -1
         self._t_eager = 0.0
         self._plan = self._compile_plan_fragments()
         self._reload_robots()
@@ -625,7 +759,7 @@ class Crawler:
                 "kind", F.lit("unmodified").alias("status"),
             ],
             "seen_cols": {
-                "h64": F.xxhash64(F.col("url_canon")),
+                "h64": url_hash(F.col("url_canon")),
             },
             "probe_cond": F.col("allowed") & F.col("status").isNull(),
             "obs_cols": [
@@ -639,36 +773,6 @@ class Crawler:
         return fsio.join(self.cfg.checkpoint_dir, *parts)
 
     # --------------------------------------------------------------- robots
-    def _robots_store_dirs(self) -> list:
-        """Committed live-robots delta dirs, oldest→newest. Only dirs
-        with a _SUCCESS marker count — a fetch that crashed mid-write
-        must not feed partial rules into the broadcast table."""
-        base = self._p("robots")
-        out = []
-        for fn in fsio.listdir(base):
-            if (
-                fn.startswith("d") and fn[1:].isdigit()
-                and fsio.exists(fsio.join(base, fn, "_SUCCESS"))
-            ):
-                out.append((int(fn[1:]), fsio.join(base, fn)))
-        return sorted(out)
-
-    def _store_newest(self) -> DataFrame | None:
-        """The live-robots store reduced to each host's NEWEST rule
-        set (ROBOTS_STORE_DDL rows; None when the store is empty) —
-        shared by reload, TTL refresh, and compaction so the
-        newest-wins selection can never diverge."""
-        dirs = self._robots_store_dirs()
-        if not dirs:
-            return None
-        store = self.spark.read.schema(ROBOTS_STORE_DDL).parquet(
-            *[p for _, p in dirs]
-        )
-        newest = store.groupBy("host").agg(
-            F.max("fetched_at").alias("fetched_at")
-        )
-        return store.join(newest, ["host", "fetched_at"], "left_semi")
-
     def _reload_robots(self) -> None:
         """(Re)build the compacted broadcast rules table from the
         static rules plus — in live mode — the newest stored rules per
@@ -687,7 +791,7 @@ class Crawler:
             known = static_hosts.withColumn(
                 "fetched_at", F.lit(float("inf"))  # static: never expires
             )
-            stored = self._store_newest()
+            stored = self._robots_store.live()
             if stored is not None:
                 live = stored.join(static_hosts, "host", "left_anti")
                 rules = rules.unionByName(live.drop("fetched_at"))
@@ -791,7 +895,7 @@ class Crawler:
         unreachable = got.filter(
             F.col("outcome") == "unreachable"
         ).select("host")
-        stored = self._store_newest()
+        stored = self._robots_store.live()
         if stored is not None:
             # unreachable at TTL REFRESH keeps the previously stored
             # rules (re-stamped, so the refresh isn't retried every
@@ -810,239 +914,41 @@ class Crawler:
         rules = rules.unionByName(allow_all(unreachable)).withColumn(
             "fetched_at", F.lit(now)
         )
-        dirs = self._robots_store_dirs()
-        idx = dirs[-1][0] + 1 if dirs else 0
-        out = self._p("robots", f"d{idx}")
-        # the write is the one materializing action for everything
-        # downstream: consumers read the parquet, never the lineage
-        rules.write.mode("overwrite").parquet(out)
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
+        self._robots_store.append(rules)
         got.unpersist()
-        if len(dirs) + 1 > self._ROBOTS_COMPACT_DIRS:
-            # growth bound INDEPENDENT of frontier compaction (round-5
-            # verdict item 7): with compact_every=0 a long crawl
-            # discovering new hosts every generation accumulates
-            # O(generations) delta dirs that every _reload_robots must
-            # list and open — fold them once past the threshold
-            # (_compact_robots_store reloads; else-branch reload below)
-            self._compact_robots_store()
-        else:
-            self._reload_robots()
-
-    def _compact_robots_store(self) -> None:
-        """Fold the live-robots delta dirs into ONE dir (newest rules
-        per host, original fetched_at preserved so TTL semantics are
-        unchanged) and prune the superseded deltas — without this a
-        10^4-generation live crawl accumulates O(generations) delta
-        dirs that every ``_reload_robots`` must list and open. Crash
-        safety mirrors the frontier compaction: the merged dir commits
-        (with _SUCCESS) before anything is deleted, and a crash
-        between commit and prune only leaves duplicate rows that the
-        newest-per-host selection collapses on the next reload."""
-        if not self._live_robots:
-            return
-        dirs = self._robots_store_dirs()
-        if len(dirs) <= 1:
-            return
-        merged = self._store_newest()
-        out = self._p("robots", f"d{dirs[-1][0] + 1}")
-        merged.write.mode("overwrite").parquet(out)
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
-        for _, p in dirs:
-            fsio.rmtree(p)
+        self._robots_store.maybe_compact()
         self._reload_robots()
 
     # ----------------------------------------------------------- validators
-    # per-URL fetch validators + revisit clock (revisit_after_s>0):
-    # same log-structured shape as the robots store — committed delta
-    # dirs, newest row per URL wins, folded into one dir past a
-    # threshold (or at compact()).
-    #
-    # Unlike robots deltas (idempotent: a re-fetch of rules is
-    # harmless), a validators delta CHANGES the behavior of a retried
-    # generation: a crash after the delta's _SUCCESS but before the
-    # generation's manifest commit would otherwise leave the retry
-    # attaching the crashed attempt's ETags — its first-visit pages
-    # come back 304 and their content is NEVER extracted. So delta
-    # visibility is gated on the MANIFEST: each manifest records
-    # ``validators_max`` (the highest delta index the committed
-    # generation produced), ``_validators_dirs`` hides higher indexes,
-    # and ``resume`` deletes them outright. Compaction outputs carry a
-    # ``_COMPACTED`` marker exempting them (a compaction between a
-    # manifest commit and the next one must stay visible — and must
-    # never be deleted by a resume — even though its index is above
-    # the last recorded max).
-    _VALIDATORS_COMPACT_DIRS = 64
-
-    def _validators_dirs(self, all_dirs: bool = False) -> list:
-        committed = self._validators_committed
-        return _delta_store_dirs(
-            self._p("validators"),
-            (1 << 62) if committed is None else committed,
-            all_dirs,
-        )
-
-    def _validators_df(self) -> DataFrame | None:
-        """Raw validators-store rows across all committed deltas (None
-        when the store is empty). Column-pruned by the caller; the
-        ``vb`` url-hash bucket is one-value-per-file at write time, so
-        an ``isin`` filter on it prunes row groups via parquet stats."""
-        dirs = self._validators_dirs()
-        if not dirs:
-            return None
-        return self.spark.read.schema(VALIDATORS_DDL).parquet(
-            *[p for _, p in dirs]
-        )
-
-    def _validators_newest(self, store: DataFrame) -> DataFrame:
-        """Newest row per URL (the live validator set). A retried
-        generation appends a duplicate delta with identical
-        fetched_at stamps — dropDuplicates collapses it."""
-        newest = store.groupBy("url").agg(
-            F.max("fetched_at").alias("fetched_at")
-        )
-        return store.join(
-            newest, ["url", "fetched_at"], "left_semi"
-        ).dropDuplicates(["url"])
-
     def _dispatch_validators(self, disp: DataFrame) -> DataFrame:
         """Attach each dispatch URL's stored validators (etag,
         last_modified) for the conditional GET. Scale shape: the store
-        scan is bucket-pruned to the dispatch batch's url-hash buckets
-        (parquet min/max stats — the store is written one bucket per
-        file), semi-filtered against the broadcast dispatch (no
-        shuffle of the store), and only then reduced newest-per-URL —
-        the groupBy shuffles a dispatch-sized set, never the store.
-        A sweep generation already reduced the whole store
-        newest-per-URL (persisted on ``self._step_val_newest``) — reuse
-        it instead of a second O(store) scan in the same step."""
+        scan is bucket-pruned to the dispatch batch's url buckets,
+        semi-filtered against the broadcast dispatch (no shuffle of the
+        store), and only then reduced newest-per-URL — the groupBy
+        shuffles a dispatch-sized set, never the store. A sweep
+        generation already reduced the whole store newest-per-URL
+        (persisted on ``self._step_val_newest``) — reuse it instead of
+        a second O(store) scan in the same step."""
+        urls = F.broadcast(disp.select("url"))
         if self._step_val_newest is not None:
-            vals = self._step_val_newest.join(
-                F.broadcast(disp.select("url")), "url", "left_semi"
-            ).select(
-                "url", "etag", "last_modified", "interval_s",
-                F.lit(True).alias("stored"),
+            vals = self._step_val_newest.join(urls, "url", "left_semi")
+        else:
+            t0 = time.time()
+            hit = self._validators.read(batch=disp)
+            self._t_eager += time.time() - t0
+            if hit is None:
+                return disp
+            vals = self._validators.reduce(
+                hit.join(urls, "url", "left_semi")
             )
-            return disp.join(F.broadcast(vals), "url", "left")
-        store = self._validators_df()
-        if store is None:
-            return disp
-        t0 = time.time()
-        vbs = [
-            r["b"] for r in disp.select(
-                F.pmod(F.xxhash64(F.col("url")),
-                       F.lit(VALIDATORS_BUCKETS)).cast("int").alias("b")
-            ).distinct().collect()
-        ]
-        self._t_eager += time.time() - t0
-        hit = store.filter(F.col("vb").isin(vbs)).join(
-            F.broadcast(disp.select("url")), "url", "left_semi"
-        )
-        vals = self._validators_newest(hit).select(
+        vals = vals.select(
             "url", "etag", "last_modified", "interval_s",
             F.lit(True).alias("stored"),
         )
         return disp.join(F.broadcast(vals), "url", "left")
 
-    def _write_validators_delta(self, rows: DataFrame) -> int:
-        """Write one validators delta (VALIDATORS_DDL rows without
-        ``vb`` — added here) — repartitioned by the url-hash bucket so
-        each output file covers one bucket value and later reads prune
-        on parquet stats. Returns the delta index; the delta only
-        becomes VISIBLE once a manifest records it as committed (see
-        the visibility contract above)."""
-        rows = rows.withColumn(
-            "vb",
-            F.pmod(F.xxhash64(F.col("url")),
-                   F.lit(VALIDATORS_BUCKETS)).cast("int"),
-        ).repartition(VALIDATORS_BUCKETS, "vb")
-        # index allocation scans ALL dirs (an invisible orphan's index
-        # must not be reused by accident — overwrite would be safe,
-        # but distinct history is simpler to reason about)
-        dirs = self._validators_dirs(all_dirs=True)
-        idx = dirs[-1][0] + 1 if dirs else 0
-        out = self._p("validators", f"d{idx}")
-        rows.write.mode("overwrite").parquet(out)
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
-        return idx
-
-    def _compact_validators_store(self) -> None:
-        """Fold the validators deltas into ONE dir (newest row per
-        URL, stamps preserved) and prune the superseded deltas — a
-        long-running revisit crawl writes one delta per generation and
-        every sweep/attach must list and open them all. Same crash
-        contract as the robots compaction: the merged dir commits
-        before anything is deleted."""
-        if not self._conditional:
-            return
-        dirs = self._validators_dirs()
-        if len(dirs) <= 1:
-            return
-        store = self._validators_df()
-        merged = self._validators_newest(store).repartition(
-            VALIDATORS_BUCKETS, "vb"
-        )
-        idx = self._validators_dirs(all_dirs=True)[-1][0] + 1
-        out = self._p("validators", f"d{idx}")
-        merged.write.mode("overwrite").parquet(out)
-        # the marker (before _SUCCESS: an unmarked-but-committed
-        # compaction could be deleted by a resume) keeps the merged
-        # dir visible and resume-proof until a manifest records it
-        fsio.write_bytes_atomic(fsio.join(out, "_COMPACTED"), b"")
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
-        for _, p in dirs:
-            fsio.rmtree(p)
-        self._validators_committed = idx
-
     # ------------------------------------------------------ media download
-    _MEDIA_COMPACT_DIRS = 64
-
-    def _media_dirs(self, all_dirs: bool = False) -> list:
-        return _delta_store_dirs(
-            self._p("media_seen"), self._media_committed, all_dirs
-        )
-
-    def _media_seen_df(self) -> DataFrame | None:
-        dirs = self._media_dirs()
-        if not dirs:
-            return None
-        return self.spark.read.schema(MEDIA_SEEN_DDL).parquet(
-            *[p for _, p in dirs]
-        )
-
-    def _write_media_seen(self, urls: DataFrame) -> int:
-        rows = urls.select("url").withColumn(
-            "vb",
-            F.pmod(F.xxhash64(F.col("url")),
-                   F.lit(MEDIA_SEEN_BUCKETS)).cast("int"),
-        ).repartition(MEDIA_SEEN_BUCKETS, "vb")
-        dirs = self._media_dirs(all_dirs=True)
-        idx = dirs[-1][0] + 1 if dirs else 0
-        out = self._p("media_seen", f"d{idx}")
-        rows.write.mode("overwrite").parquet(out)
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
-        return idx
-
-    def _compact_media_seen(self) -> None:
-        """Fold the per-generation membership deltas into one dir
-        (distinct urls; same crash contract as the other stores)."""
-        if not self.cfg.media_dir:
-            return
-        dirs = self._media_dirs()
-        if len(dirs) <= 1:
-            return
-        merged = self._media_seen_df().dropDuplicates(["url"]).repartition(
-            MEDIA_SEEN_BUCKETS, "vb"
-        )
-        idx = self._media_dirs(all_dirs=True)[-1][0] + 1
-        out = self._p("media_seen", f"d{idx}")
-        merged.write.mode("overwrite").parquet(out)
-        fsio.write_bytes_atomic(fsio.join(out, "_COMPACTED"), b"")
-        fsio.write_bytes_atomic(fsio.join(out, "_SUCCESS"), b"")
-        for _, p in dirs:
-            fsio.rmtree(p)
-        self._media_committed = idx
-
     def _fetch_media(self, extracted: DataFrame, g: int) -> dict:
         """The reference's download() stage (main.rs:166-279) as a
         per-generation batch: fetch every NEW download_url the
@@ -1086,22 +992,12 @@ class Crawler:
         # counted HERE, off the live cache — after unpersist this
         # would re-run the candidate scan + robots evaluation
         n_allowed = allowed.count()
-        seen = self._media_seen_df()
+        seen = self._media_seen.read(batch=allowed)
         new = allowed.select("url", "host", "crawl_delay")
         if seen is not None:
-            vbs = [
-                r["b"] for r in allowed.select(
-                    F.pmod(F.xxhash64(F.col("url")),
-                           F.lit(MEDIA_SEEN_BUCKETS)).cast("int")
-                    .alias("b")
-                ).distinct().collect()
-            ]
             # batch-sized anti-join against the bucket-pruned store
             # slice; no broadcast forced — AQE sizes it
-            new = new.join(
-                seen.filter(F.col("vb").isin(vbs)).select("url"),
-                "url", "left_anti",
-            )
+            new = new.join(seen.select("url"), "url", "left_anti")
         # with_status: every attempted URL emits a row, so attempt
         # counts, archive rows, and the definitive-outcome set all
         # come from ONE materialized fetch — no recomputation of the
@@ -1138,7 +1034,7 @@ class Crawler:
         ).select("url")
         n_definitive = definitive.count()
         if n_definitive:
-            self._media_committed = self._write_media_seen(definitive)
+            self._media_seen.committed = self._media_seen.append(definitive)
         got.unpersist()
         checked.unpersist()
         stats = {
@@ -1172,15 +1068,15 @@ class Crawler:
         instead of re-entering the sweep every generation. Returns
         (pending ∪ revisits, terminal rows to fold into this
         generation's delta or None)."""
-        store = self._validators_df()
-        if store is None:
+        newest = self._validators.live()
+        if newest is None:
             return pending, None
         now = time.time()
         # ONE newest-per-URL reduction serves the whole step: the due
         # filter here and the dispatch validator attach later
         # (_dispatch_validators) — persisted, unpersisted with the
         # step's other caches
-        newest = self._validators_newest(store).persist()
+        newest = newest.persist()
         self._strict_caches.append(newest)
         self._step_val_newest = newest
         # per-URL adaptive interval (AIMD, see CrawlConfig), CLAMPED
@@ -1517,15 +1413,7 @@ class Crawler:
             from img_spark.sources.tables import PAGES_BUCKET_COL
 
             t_eager0 = time.time()
-            mods = [
-                r["b"]
-                for r in dispatch.select(
-                    F.pmod(
-                        F.xxhash64(F.col("url")),
-                        F.lit(self.cfg.pages_buckets),
-                    ).cast("int").alias("b")
-                ).distinct().collect()
-            ]
+            mods = batch_buckets(dispatch, "url", self.cfg.pages_buckets)
             self._t_eager += time.time() - t_eager0
             pages = pages.filter(F.col(PAGES_BUCKET_COL).isin(mods))
         fetched_cache = None
@@ -1706,10 +1594,11 @@ class Crawler:
         # frontier-state plan — overlapping the two instead of paying
         # plan-then-execute serially. FIFO submission order (extract
         # first) is unchanged, so the cache-fill behavior the old
-        # simultaneous submit relied on is identical; a construction
-        # error below still propagates after the finally-shutdown, and
-        # a completed-but-uncommitted extracted dir is exactly the
-        # crash-mid-write case the manifest visibility contract covers.
+        # simultaneous submit relied on is identical. A construction
+        # error below propagates only after the write has finished (see
+        # the try), and a completed-but-uncommitted extracted dir is
+        # exactly the crash-mid-write case the manifest visibility
+        # contract covers.
         import concurrent.futures
 
         def _write_extracted():
@@ -1722,187 +1611,194 @@ class Crawler:
         pool = concurrent.futures.ThreadPoolExecutor(3)
         t_submit0 = time.time()
         fut_e = pool.submit(_write_extracted)
-
-        # ---- discovered candidates: albums (doc order) then next
-        albums = results.select(*P["albums_cols"]).withColumns(
-            P["albums_with"]
-        )
-        nxt = results.filter(F.col("next_url") != "").select(
-            *P["nxt_cols"]
-        ).withColumns(P["nxt_with"])
-
-        cand = albums.unionByName(nxt).select(
-            *P["cand_pre"], F.lit(g).alias("generation")
-        )
-        if red_all is not None:
-            # strict redirect policy: parked cross-host targets become
-            # candidates of kind='redirect' — same admission path as
-            # albums/next (robots check + seen-set below). depth/path
-            # come from the redirecting frontier row (fan-out is 1 per
-            # parent, so the fixed 'fffffffe' child seq is unique and
-            # sorts after every album/next child)
-            red_cand = red_all.join(
-                F.broadcast(dispatch.select(
-                    F.col("url").alias("parent_url"), "depth",
-                    F.col("path").alias("ppath"),
-                )),
-                "parent_url", "inner",
-            ).select(
-                F.col("url"),
-                F.col("url").alias("url_canon"),
-                host_of(F.col("url")).alias("host"),
-                "depth",
-                F.concat(F.col("ppath"), F.lit("fffffffe")).alias("path"),
-                "parent_url",
-                F.lit("redirect").alias("kind"),
-                F.lit(g).alias("generation"),
-            )
-            cand = cand.unionByName(red_cand)
-        bad = cand.filter(F.col("host").isNull()).withColumns(P["bad_cols"])
-        # live mode: hosts discovered THIS generation get their
-        # robots.txt fetched before the admission check below — their
-        # Disallow rules decide status and their Crawl-delay rides the
-        # frontier row into the next dispatch (the round-4 hole: such
-        # hosts were admitted allow-all with zero delay)
-        self._ensure_robots(cand)
-        ok = apply_robots_rules(
-            cand.filter(F.col("host").isNotNull()), self._robots_rules,
-            compiled=self._plan["robots"],
-        )
-        checked = self._seen_filter(
-            ok.unionByName(bad, allowMissingColumns=True), g
-        )
-        new_rows = checked.withColumn(
-            "status", P["status_col"]
-        ).select(*_frontier_cols())
-
-        # ---- pending snapshot (rewritten, shrinks) + terminal delta (append)
-        done = results.select(
-            *P["done_pre"], F.lit(g).alias("generation"), *P["done_post"]
-        ).unionByName(
-            failed.select(
-                *P["failed_pre"], F.lit(g).alias("generation"),
-                *P["failed_post"],
-            )
-        )
-        if redirected is not None:
-            done = done.unionByName(
-                redirected.select(
-                    *P["redirected_pre"], F.lit(g).alias("generation"),
-                    *P["failed_post"],
-                )
-            )
-        if unmodified is not None:
-            done = done.unionByName(
-                unmodified.select(
-                    *P["unmodified_pre"], F.lit(g).alias("generation"),
-                    *P["failed_post"],
-                )
-            )
-        if revisit_blocked is not None:
-            done = done.unionByName(revisit_blocked)
-        # ONE status-partitioned write per generation: rewritten pending
-        # (held + newly discovered) + this generation's terminal delta
-        # (done already unions the fetch_failed rows). History ('rest')
-        # is NOT rewritten — it lives in earlier generations' dirs.
-        state = (
-            held.select(*_frontier_cols())
-            .unionByName(done.select(*_frontier_cols()))
-            .unionByName(new_rows)
-        )
-
-        # the extracted sink and the frontier-state sink are
-        # INDEPENDENT consumers of the cached extraction — the extract
-        # write was submitted above (overlapping the state-plan
-        # construction); the state write is submitted here so the
-        # per-generation wall is max(extract, state) instead of their
-        # sum, and the state job's probe shuffle overlaps the extract
-        # job's commit I/O. The shared `results` cache fills as the
-        # first job's tasks complete; under the default FIFO scheduler
-        # the extract job (submitted first) holds the cores for its
-        # extraction stage, so the state job's results-dependent tasks
-        # mostly read the cache — duplicate extraction is bounded by
-        # the scheduling tail, not the batch (measured: concurrent
-        # beats materialize-then-write by ~20% per generation).
-        # Exceptions propagate via futures.
-        def _write_frontier():
-            t = time.time()
-            counts = self._write_state(state, g)
-            return counts, time.time() - t
-
-        # revisit mode: this generation's validators delta — response
-        # validators of every 200/304 (depth/path from the dispatch
-        # row) plus the revisit-disallowed restamps from the sweep
-        val_delta = None
-        if self._step_validators:
-            now_stamp = time.time()
-            # AIMD interval update (CrawlConfig.revisit_min_s/max_s):
-            # first fetch starts at the base TTL, a 304 doubles the
-            # previous interval (capped), changed content halves it
-            # (floored). With both bounds defaulted to the base this
-            # collapses to a fixed cadence.
-            base = F.lit(self.cfg.revisit_after_s)
-            mn = F.lit(self.cfg.revisit_min_s or self.cfg.revisit_after_s)
-            mx = F.lit(self.cfg.revisit_max_s or self.cfg.revisit_after_s)
-            prev = F.col("prev_interval")
-            # clamp the previous interval into the CURRENT bounds
-            # first, so reconfigured min/max take effect immediately
-            # instead of decaying in over many visits
-            prev_c = F.least(F.greatest(F.coalesce(prev, base), mn), mx)
-            interval = (
-                F.when(prev.isNull(), base)
-                .when(F.col("unchanged"), F.least(prev_c * 2, mx))
-                .otherwise(F.greatest(prev_c / 2, mn))
-            )
-            prev_ints = (
-                self._step_prev_intervals
-                if self._step_prev_intervals is not None
-                else dispatch.select(
-                    "url", F.lit(None).cast("double").alias("interval_s")
-                )
-            ).select("url", F.col("interval_s").alias("prev_interval"))
-            parts = []
-            for v in self._step_validators:
-                if "fetched_at" in v.columns:
-                    parts.append(v)  # sweep restamps: already complete
-                else:
-                    parts.append(
-                        v.join(
-                            F.broadcast(
-                                dispatch.select("url", "depth", "path")
-                            ),
-                            "url", "inner",
-                        ).join(
-                            F.broadcast(prev_ints), "url", "left"
-                        ).select(
-                            "url", "host", "depth", "path", "etag",
-                            "last_modified",
-                            F.lit(now_stamp).alias("fetched_at"),
-                            interval.alias("interval_s"),
-                        )
-                    )
-            val_delta = parts[0]
-            for x in parts[1:]:
-                val_delta = val_delta.unionByName(x)
-
-        def _write_validators():
-            t = time.time()
-            idx = self._write_validators_delta(val_delta)
-            return time.time() - t, idx
-
-        t0 = time.time()
-        # plan = pure driver-side construction (py4j + eager Catalyst
-        # analysis); eager Spark work inside the window (_ensure_robots
-        # fetches, bucket-id collects) is accounted separately so the
-        # attribution in BENCH/CRAWL_OVERHEAD.md measures what it names.
-        # Since r8 the extract write runs UNDER the tail of this window
-        # (submitted right after `extracted` was built), so `plan` and
-        # `writes_wall` overlap by (t0 - t_submit0); `writes_wall` is
-        # measured from the FIRST submit to keep it the true wall of
-        # the write phase.
-        t_plan = t0 - t_step0 - self._t_eager
-        t_validators = 0.0
+        # every exit from here on — an exception while the state plan
+        # is still being built included — waits for the submitted
+        # writes and shuts the pool down: a retried generation must
+        # never race an orphaned overwrite of extracted/g{g}
         try:
+            # ---- discovered candidates: albums (doc order) then next
+            albums = results.select(*P["albums_cols"]).withColumns(
+                P["albums_with"]
+            )
+            nxt = results.filter(F.col("next_url") != "").select(
+                *P["nxt_cols"]
+            ).withColumns(P["nxt_with"])
+
+            cand = albums.unionByName(nxt).select(
+                *P["cand_pre"], F.lit(g).alias("generation")
+            )
+            if red_all is not None:
+                # strict redirect policy: parked cross-host targets become
+                # candidates of kind='redirect' — same admission path as
+                # albums/next (robots check + seen-set below). depth/path
+                # come from the redirecting frontier row (fan-out is 1 per
+                # parent, so the fixed 'fffffffe' child seq is unique and
+                # sorts after every album/next child)
+                red_cand = red_all.join(
+                    F.broadcast(dispatch.select(
+                        F.col("url").alias("parent_url"), "depth",
+                        F.col("path").alias("ppath"),
+                    )),
+                    "parent_url", "inner",
+                ).select(
+                    F.col("url"),
+                    F.col("url").alias("url_canon"),
+                    host_of(F.col("url")).alias("host"),
+                    "depth",
+                    F.concat(F.col("ppath"), F.lit("fffffffe")).alias("path"),
+                    "parent_url",
+                    F.lit("redirect").alias("kind"),
+                    F.lit(g).alias("generation"),
+                )
+                cand = cand.unionByName(red_cand)
+            bad = cand.filter(F.col("host").isNull()).withColumns(
+                P["bad_cols"]
+            )
+            # live mode: hosts discovered THIS generation get their
+            # robots.txt fetched before the admission check below — their
+            # Disallow rules decide status and their Crawl-delay rides the
+            # frontier row into the next dispatch (the round-4 hole: such
+            # hosts were admitted allow-all with zero delay)
+            self._ensure_robots(cand)
+            ok = apply_robots_rules(
+                cand.filter(F.col("host").isNotNull()), self._robots_rules,
+                compiled=self._plan["robots"],
+            )
+            checked = self._seen_filter(
+                ok.unionByName(bad, allowMissingColumns=True), g
+            )
+            new_rows = checked.withColumn(
+                "status", P["status_col"]
+            ).select(*_frontier_cols())
+
+            # ---- pending snapshot (rewritten, shrinks) + terminal delta
+            # (append)
+            done = results.select(
+                *P["done_pre"], F.lit(g).alias("generation"), *P["done_post"]
+            ).unionByName(
+                failed.select(
+                    *P["failed_pre"], F.lit(g).alias("generation"),
+                    *P["failed_post"],
+                )
+            )
+            if redirected is not None:
+                done = done.unionByName(
+                    redirected.select(
+                        *P["redirected_pre"], F.lit(g).alias("generation"),
+                        *P["failed_post"],
+                    )
+                )
+            if unmodified is not None:
+                done = done.unionByName(
+                    unmodified.select(
+                        *P["unmodified_pre"], F.lit(g).alias("generation"),
+                        *P["failed_post"],
+                    )
+                )
+            if revisit_blocked is not None:
+                done = done.unionByName(revisit_blocked)
+            # ONE status-partitioned write per generation: rewritten pending
+            # (held + newly discovered) + this generation's terminal delta
+            # (done already unions the fetch_failed rows). History ('rest')
+            # is NOT rewritten — it lives in earlier generations' dirs.
+            state = (
+                held.select(*_frontier_cols())
+                .unionByName(done.select(*_frontier_cols()))
+                .unionByName(new_rows)
+            )
+
+            # the extracted sink and the frontier-state sink are
+            # INDEPENDENT consumers of the cached extraction — the extract
+            # write was submitted above (overlapping the state-plan
+            # construction); the state write is submitted here so the
+            # per-generation wall is max(extract, state) instead of their
+            # sum, and the state job's probe shuffle overlaps the extract
+            # job's commit I/O. The shared `results` cache fills as the
+            # first job's tasks complete; under the default FIFO scheduler
+            # the extract job (submitted first) holds the cores for its
+            # extraction stage, so the state job's results-dependent tasks
+            # mostly read the cache — duplicate extraction is bounded by
+            # the scheduling tail, not the batch (measured: concurrent
+            # beats materialize-then-write by ~20% per generation).
+            # Exceptions propagate via futures.
+            def _write_frontier():
+                t = time.time()
+                counts = self._write_state(state, g)
+                return counts, time.time() - t
+
+            # revisit mode: this generation's validators delta — response
+            # validators of every 200/304 (depth/path from the dispatch
+            # row) plus the revisit-disallowed restamps from the sweep
+            val_delta = None
+            if self._step_validators:
+                now_stamp = time.time()
+                # AIMD interval update (CrawlConfig.revisit_min_s/max_s):
+                # first fetch starts at the base TTL, a 304 doubles the
+                # previous interval (capped), changed content halves it
+                # (floored). With both bounds defaulted to the base this
+                # collapses to a fixed cadence.
+                base = F.lit(self.cfg.revisit_after_s)
+                mn = F.lit(self.cfg.revisit_min_s or self.cfg.revisit_after_s)
+                mx = F.lit(self.cfg.revisit_max_s or self.cfg.revisit_after_s)
+                prev = F.col("prev_interval")
+                # clamp the previous interval into the CURRENT bounds
+                # first, so reconfigured min/max take effect immediately
+                # instead of decaying in over many visits
+                prev_c = F.least(F.greatest(F.coalesce(prev, base), mn), mx)
+                interval = (
+                    F.when(prev.isNull(), base)
+                    .when(F.col("unchanged"), F.least(prev_c * 2, mx))
+                    .otherwise(F.greatest(prev_c / 2, mn))
+                )
+                prev_ints = (
+                    self._step_prev_intervals
+                    if self._step_prev_intervals is not None
+                    else dispatch.select(
+                        "url", F.lit(None).cast("double").alias("interval_s")
+                    )
+                ).select("url", F.col("interval_s").alias("prev_interval"))
+                parts = []
+                for v in self._step_validators:
+                    if "fetched_at" in v.columns:
+                        parts.append(v)  # sweep restamps: already complete
+                    else:
+                        parts.append(
+                            v.join(
+                                F.broadcast(
+                                    dispatch.select("url", "depth", "path")
+                                ),
+                                "url", "inner",
+                            ).join(
+                                F.broadcast(prev_ints), "url", "left"
+                            ).select(
+                                "url", "host", "depth", "path", "etag",
+                                "last_modified",
+                                F.lit(now_stamp).alias("fetched_at"),
+                                interval.alias("interval_s"),
+                            )
+                        )
+                val_delta = parts[0]
+                for x in parts[1:]:
+                    val_delta = val_delta.unionByName(x)
+
+            def _write_validators():
+                t = time.time()
+                idx = self._validators.append(val_delta)
+                return time.time() - t, idx
+
+            t0 = time.time()
+            # plan = pure driver-side construction (py4j + eager
+            # Catalyst analysis); eager Spark work inside the window
+            # (_ensure_robots fetches, bucket-id collects) is accounted
+            # separately so the attribution in BENCH/CRAWL_OVERHEAD.md
+            # measures what it names. Since r8 the extract write runs
+            # UNDER the tail of this window (submitted right after
+            # `extracted` was built), so `plan` and `writes_wall`
+            # overlap by (t0 - t_submit0); `writes_wall` is measured
+            # from the FIRST submit to keep it the true wall of the
+            # write phase.
+            t_plan = t0 - t_step0 - self._t_eager
+            t_validators = 0.0
             fut_s = pool.submit(_write_frontier)
             fut_v = (
                 pool.submit(_write_validators)
@@ -1911,11 +1807,9 @@ class Crawler:
             t_extract = fut_e.result()
             state_counts, t_state = fut_s.result()
             if fut_v is not None:
-                # recorded as committed by THIS generation's manifest
-                # below — a crash before that commit leaves the delta
-                # invisible and resume() deletes it (see validators
-                # visibility contract)
-                t_validators, self._validators_committed = fut_v.result()
+                # recorded by THIS generation's manifest below (see
+                # DeltaStore)
+                t_validators, self._validators.committed = fut_v.result()
         finally:
             pool.shutdown(wait=True)
         t_writes_end = time.time()
@@ -1978,21 +1872,8 @@ class Crawler:
             extra.update(media_stats)
         stats = self._commit_generation(g, extra, counts=state_counts)
         self.generation = g
-        # auto-compaction must run AFTER the manifest commit: a
-        # compaction folds this step's delta into a _COMPACTED dir that
-        # is exempt from the visibility gate — doing that before the
-        # commit would smuggle an uncommitted delta past the crash
-        # contract (round-7 review)
-        if (
-            val_delta is not None
-            and len(self._validators_dirs()) > self._VALIDATORS_COMPACT_DIRS
-        ):
-            self._compact_validators_store()
-        if (
-            self.cfg.media_dir
-            and len(self._media_dirs()) > self._MEDIA_COMPACT_DIRS
-        ):
-            self._compact_media_seen()
+        for st in self._gated_stores:  # after the commit (see DeltaStore)
+            st.maybe_compact()
         return stats
 
     def _commit_generation(self, g: int, extra: dict, counts=None) -> dict:
@@ -2054,15 +1935,14 @@ class Crawler:
         (rejected/disallowed rows never enter the seen set — the
         reference never fetched them either). ``cand`` must carry
         ``status`` (nullable) and ``allowed`` columns."""
-        # salt expression built per call: cfg.partitions may be
-        # adjusted after construction (tests do) — but it rides in the
-        # SAME withColumns dict as h64 (one DataFrame op, one analysis
-        # pass, instead of the former withColumns + withColumn pair)
+        # salt and h64 both derive from urlexprs.url_hash (the salt
+        # must shard by the hash the blobs are probed with). The salt
+        # is built per call: cfg.partitions may be adjusted after
+        # construction (tests do) — but it rides in the SAME
+        # withColumns dict as h64 (one DataFrame op, one analysis pass)
         cand = cand.withColumns({
             **self._plan["seen_cols"],
-            "salt": F.pmod(
-                F.xxhash64(F.col("url_canon")), F.lit(self.cfg.partitions)
-            ),
+            "salt": url_bucket(F.col("url_canon"), self.cfg.partitions),
         })
         probe_cond = self._plan["probe_cond"]
         probe = cand.filter(probe_cond)
@@ -2194,13 +2074,10 @@ class Crawler:
             "ts": time.time(),
             **extra,
         }
-        if self._conditional and self._validators_committed is not None:
-            # the validators-store visibility frontier rides the same
-            # atomic commit as the rest of the generation's state
-            m["validators_max"] = self._validators_committed
-        if self.cfg.media_dir:
-            # same contract for the media-seen store
-            m["media_seen_max"] = self._media_committed
+        for st in self._gated_stores:
+            # each gated store's visibility floor rides the same atomic
+            # commit as the rest of the generation's state
+            m[st.manifest_key] = st.committed
         # atomic commit on any pyarrow.fs scheme (rename locally, one
         # PUT on object stores)
         fsio.write_bytes_atomic(
@@ -2247,63 +2124,27 @@ class Crawler:
             for k, v in m.get("frontier_status", {}).items()
             if k != "pending"
         }
-        # restore each manifest-gated store's visibility frontier and
-        # DELETE deltas a crashed (never-committed) step left behind —
-        # a retried generation must refetch unconditionally / must not
-        # skip media whose archive never committed. Compaction outputs
-        # (_COMPACTED) are exempt: they may legitimately postdate the
-        # last manifest. See _resume_store_floor for the missing-key
-        # walk-back.
+        # restore each gated store's visibility floor and delete the
+        # deltas a crashed (never-committed) step left behind; manifests
+        # older than g are read lazily, once, for the floor walk-back
         older = sorted((x for x in gens if x < g), reverse=True)
-        manifest_cache: dict = {}
-        if self._conditional:
-            self._validators_committed = self._resume_store_floor(
-                m, "validators_max", older, manifest_cache
-            )
-            _prune_store_orphans(
-                self._validators_dirs(all_dirs=True),
-                self._validators_committed,
-            )
-        if self.cfg.media_dir:
-            # media-seen store: same orphan-deletion contract — an
-            # uncommitted membership delta would make the retry SKIP
-            # media whose archive never committed
-            self._media_committed = self._resume_store_floor(
-                m, "media_seen_max", older, manifest_cache
-            )
-            _prune_store_orphans(
-                self._media_dirs(all_dirs=True), self._media_committed
-            )
-        return g
+        cache: dict = {}
 
-    def _resume_store_floor(
-        self, m: dict, key: str, older: list, cache: dict
-    ) -> int:
-        """Committed floor of a manifest-gated store at resume time.
-        The resumed manifest's value when it has one; otherwise WALK
-        OLDER manifests newest-first — a crawl resumed for a while
-        WITHOUT the feature (revisit_after_s=0 / no media_dir) writes
-        manifests without the key, and wiping the older committed
-        history on the next feature-enabled resume would re-download
-        or unconditionally re-fetch everything (round-7 review). Only
-        when NO manifest ever recorded the key is the store floor -1
-        (any delta found is a crashed first attempt's orphan).
-        ``older`` is resume()'s already-computed manifest-generation
-        list (newest first); ``cache`` memoizes manifest reads across
-        the per-store calls — no duplicate listdir or JSON I/O."""
-        if key in m:
-            return m[key]
-        for og in older:
-            if og not in cache:
-                try:
-                    cache[og] = json.loads(
-                        fsio.read_bytes(self._manifest_path(og))
-                    )
-                except (FileNotFoundError, OSError, ValueError):
-                    cache[og] = {}
-            if key in cache[og]:
-                return cache[og][key]
-        return -1
+        def manifests():
+            yield m
+            for og in older:
+                if og not in cache:
+                    try:
+                        cache[og] = json.loads(
+                            fsio.read_bytes(self._manifest_path(og))
+                        )
+                    except (OSError, ValueError):
+                        cache[og] = {}
+                yield cache[og]
+
+        for st in self._gated_stores:
+            st.resume(manifests())
+        return g
 
     def frontier_df(self) -> DataFrame:
         """Full frontier view at the current generation (see
@@ -2324,9 +2165,10 @@ class Crawler:
         overwrites; nothing is ever pruned on the strength of an
         uncommitted compaction."""
         g = self.generation
-        self._compact_robots_store()
-        self._compact_validators_store()
-        self._compact_media_seen()
+        if self._robots_store is not None and self._robots_store.compact():
+            self._reload_robots()
+        for st in self._gated_stores:
+            st.compact()
         floor = _compaction_floor(self.cfg.checkpoint_dir)
         if floor > g:
             # already compacted through this generation — a second call

@@ -63,7 +63,7 @@ def write_pages_bucketed(
     pages: DataFrame, path: str, n_buckets: int = 1024
 ) -> None:
     """Materialize the pages table hash-partitioned by
-    ``pmod(xxhash64(url), n_buckets)`` — the layout that makes the
+    ``urlexprs.url_bucket(url, n_buckets)`` — the layout that makes the
     per-generation fetch scan PRUNABLE: a crawl generation dispatches a
     tiny fraction of all URLs, so the fetch join only needs the
     partitions their hashes land in. Without this layout every
@@ -72,9 +72,10 @@ def write_pages_bucketed(
     spec is the production twin of this directory layout."""
     from pyspark.sql import functions as F
 
+    from img_spark.operators.urlexprs import url_bucket
+
     pages.withColumn(
-        PAGES_BUCKET_COL,
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"),
+        PAGES_BUCKET_COL, url_bucket(F.col("url"), n_buckets).cast("int"),
     ).write.mode("overwrite").partitionBy(PAGES_BUCKET_COL).parquet(path)
 
 

@@ -264,9 +264,9 @@ def test_ttl_refresh_outage_keeps_cached_rules(spark, xy_server, tmp_path):
 def test_robots_store_compaction_folds_deltas_newest_wins(
     spark, xy_server, tmp_path
 ):
-    """_compact_robots_store merges the per-fetch delta dirs into one
-    (a 10^4-generation live crawl must not accumulate O(generations)
-    dirs): newest rules per host survive with their original
+    """The robots DeltaStore's compaction merges the per-fetch delta
+    dirs into one (a 10^4-generation live crawl must not accumulate
+    O(generations) dirs): newest rules per host survive with their original
     fetched_at, superseded deltas are pruned, and the freshness index
     still prevents re-fetches afterwards."""
     connect, site, log = xy_server
@@ -277,11 +277,12 @@ def test_robots_store_compaction_folds_deltas_newest_wins(
     site[("host-y.test", "/robots.txt")] = b"User-agent: *\nDisallow: /\n"
     c._ensure_robots(hosts_y)                                    # d1
     c._ensure_robots(hosts_x)                                    # d2
-    assert len(c._robots_store_dirs()) == 3
+    assert len(c._robots_store.dirs()) == 3
 
     c.cfg.robots_ttl_s = 86400.0
-    c._compact_robots_store()
-    assert len(c._robots_store_dirs()) == 1
+    c._robots_store.compact()
+    c._reload_robots()
+    assert len(c._robots_store.dirs()) == 1
 
     probe = spark.createDataFrame(
         [("https://host-y.test/p/1", "host-y.test"),
@@ -438,12 +439,12 @@ def test_robots_store_autocompacts_past_threshold(
     item 7: compact_every=0 crawls accumulated O(generations) dirs)."""
     connect, _site, _log = xy_server
     c = _crawler(spark, str(tmp_path / "ck"), connect, robots_ttl_s=0.0)
-    c._ROBOTS_COMPACT_DIRS = 2
+    c._robots_store.compact_dirs = 2
     for host in ("host-x.test", "host-y.test", "host-z.test"):
         c._ensure_robots(
             spark.createDataFrame([(host,)], "host string")
         )
-    assert len(c._robots_store_dirs()) == 1
+    assert len(c._robots_store.dirs()) == 1
     # rules survive the fold
     probe = spark.createDataFrame(
         [("https://host-y.test/secret/1", "host-y.test")],

@@ -177,7 +177,7 @@ def test_media_download_end_to_end(spark, media_server, tmp_path):
 
     # dead-image contract: a LATER generation re-discovering the 404
     # URL must not retry it (it is in the seen store)
-    seen = {r["url"] for r in c._media_seen_df().collect()}
+    seen = {r["url"] for r in c._media_seen.read().collect()}
     assert "https://m.test/missing.gif" in seen
     assert "https://m.test/secret/hidden.jpg" not in seen  # blocked ≠ seen
 
@@ -199,7 +199,7 @@ def test_media_seen_survives_resume_and_dedups(
 
     # the outage victim is NOT blacklisted (transient ≠ definitive):
     # not in the seen store, counted as deferred in the manifest
-    seen0 = {r["url"] for r in c._media_seen_df().collect()}
+    seen0 = {r["url"] for r in c._media_seen.read().collect()}
     assert "https://m.test/transient.png" not in seen0
     deferred = sum(
         json.loads(fsio.read_bytes(fsio.join(ckpt, fn))).get(
@@ -210,7 +210,7 @@ def test_media_seen_survives_resume_and_dedups(
     fail5xx.clear()  # CDN recovers
 
     # orphan delta (crashed step): written, never manifest-committed
-    i_orphan = c._write_media_seen(
+    i_orphan = c._media_seen.append(
         spark.createDataFrame([("https://m.test/ghost.jpg",)],
                               "url string")
     )
@@ -255,9 +255,9 @@ def test_media_floor_survives_featureless_resume(
     media = str(tmp_path / "media")
     c = _crawler(spark, ckpt, media, connect)
     c.run(seeds=["https://m.test/"])
-    floor = c._media_committed
+    floor = c._media_seen.committed
     assert floor >= 0
-    dirs_before = [p for _, p in c._media_dirs()]
+    dirs_before = [p for _, p in c._media_seen.dirs()]
     assert dirs_before
 
     # simulate a later generation committed by a media-less resume:
@@ -276,7 +276,7 @@ def test_media_floor_survives_featureless_resume(
 
     c2 = _crawler(spark, ckpt, media, connect)
     c2.resume()
-    assert c2._media_committed == floor        # walked back, not -1
+    assert c2._media_seen.committed == floor        # walked back, not -1
     for p in dirs_before:
         assert fsio.isdir(p), p               # history intact
 

@@ -243,7 +243,7 @@ def test_revisit_304_zero_bytes_and_changed_page_reextracts(
 
     vals = {
         r["url"]: r
-        for r in c2._validators_newest(c2._validators_df()).collect()
+        for r in c2._validators.live().collect()
     }
     for u in ("https://host-r.test/", "https://host-r.test/p/1",
               "https://host-r.test/p/2"):
@@ -296,7 +296,7 @@ def test_revisit_rechecks_robots_and_restamps_blocked(
     # another TTL elapses
     vals = {
         r["url"]: r["fetched_at"]
-        for r in c2._validators_newest(c2._validators_df()).collect()
+        for r in c2._validators.live().collect()
     }
     assert vals["https://host-r.test/p/1"] >= t_before
     assert vals["https://host-r.test/p/2"] >= t_before
@@ -484,33 +484,33 @@ def test_validators_visibility_gated_on_manifest(spark, tmp_path):
         "url string, host string, depth int, path string, etag string,"
         " last_modified string, fetched_at double, interval_s double",
     )
-    i0 = c._write_validators_delta(rows)
+    i0 = c._validators.append(rows)
     # written but not manifest-committed: invisible
-    assert c._validators_dirs() == []
-    assert c._validators_df() is None
+    assert c._validators.dirs() == []
+    assert c._validators.read() is None
     # committed: visible (and recorded by the next manifest)
-    c._validators_committed = i0
-    assert [i for i, _ in c._validators_dirs()] == [i0]
+    c._validators.committed = i0
+    assert [i for i, _ in c._validators.dirs()] == [i0]
     c._commit_manifest(0, {"frontier_status": {}})
 
     # an orphan from a crashed step: above the committed max
-    i1 = c._write_validators_delta(rows)
-    assert [i for i, _ in c._validators_dirs()] == [i0]
+    i1 = c._validators.append(rows)
+    assert [i for i, _ in c._validators.dirs()] == [i0]
     # a compaction output above the max IS visible (marker)
     comp = f"{ckpt}/validators/d7"
     fsio.makedirs(comp)
     fsio.write_bytes_atomic(f"{comp}/_COMPACTED", b"")
     fsio.write_bytes_atomic(f"{comp}/_SUCCESS", b"")
-    assert [i for i, _ in c._validators_dirs()] == [i0, 7]
+    assert [i for i, _ in c._validators.dirs()] == [i0, 7]
 
     # resume: restores the committed frontier, DELETES the orphan,
     # keeps the compaction output
     c2 = _crawler(spark, ckpt, "http://127.0.0.1:9")
     c2.resume()
-    assert c2._validators_committed == i0
+    assert c2._validators.committed == i0
     assert not fsio.isdir(f"{ckpt}/validators/d{i1}")
     assert fsio.isdir(comp)
-    assert [i for i, _ in c2._validators_dirs()] == [i0, 7]
+    assert [i for i, _ in c2._validators.dirs()] == [i0, 7]
 
 
 def test_resume_pre_validators_manifest_deletes_orphan_deltas(
@@ -542,7 +542,7 @@ def test_resume_pre_validators_manifest_deletes_orphan_deltas(
         "url string, host string, depth int, path string, etag string,"
         " last_modified string, fetched_at double, interval_s double",
     )
-    i0 = c._write_validators_delta(rows)
+    i0 = c._validators.append(rows)
     assert fsio.isdir(f"{ckpt}/validators/d{i0}")
 
     c2 = _crawler(spark, ckpt, "http://127.0.0.1:9")
@@ -550,8 +550,8 @@ def test_resume_pre_validators_manifest_deletes_orphan_deltas(
     # the orphan is gone, the visibility floor engages at -1 (so the
     # NEXT manifest records validators_max and gating works from here)
     assert not fsio.isdir(f"{ckpt}/validators/d{i0}")
-    assert c2._validators_committed == -1
-    assert c2._validators_df() is None
+    assert c2._validators.committed == -1
+    assert c2._validators.read() is None
     c2._commit_manifest(0, {"frontier_status": {}})
     m2 = json.loads(fsio.read_bytes(mp))
     assert m2["validators_max"] == -1
@@ -597,7 +597,7 @@ def test_failed_revisit_restamps_and_backs_off(spark, cond_server, tmp_path):
     # stored validators preserved
     vals = {
         r["url"]: r
-        for r in c2._validators_newest(c2._validators_df()).collect()
+        for r in c2._validators.live().collect()
     }
     v = vals["https://host-r.test/p/1"]
     assert v["fetched_at"] >= t_before
