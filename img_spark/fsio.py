@@ -1,5 +1,5 @@
 """Checkpoint filesystem layer: every byte of crawl state (cuckoo
-blobs, manifests, parquet-footer reads, compaction listings) goes
+blobs, manifests, compaction listings) goes
 through pyarrow.fs instead of POSIX calls, so the checkpoint dir can
 live on any scheme pyarrow resolves — local paths, ``file://``,
 ``s3://``, ``hdfs://`` (north_star: the 100-TB deployment checkpoints
@@ -133,12 +133,3 @@ def write_bytes_atomic(path: str, data: bytes) -> None:
         # object stores: one PUT is atomic; rename is copy+delete
         with fs.open_output_stream(p) as f:
             f.write(data)
-
-
-def parquet_num_rows(path: str) -> int:
-    """Row count from one parquet file's footer (no data read)."""
-    import pyarrow.parquet as pq
-
-    fs, p = resolve(path)
-    with fs.open_input_file(p) as f:
-        return pq.ParquetFile(f).metadata.num_rows

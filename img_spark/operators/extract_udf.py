@@ -194,7 +194,7 @@ def resolve_second_level(
     pages_buckets: int = 0,
     fetch_fn=None,
     compiled: dict | None = None,
-    eager_timer=None,
+    eager=None,
 ) -> DataFrame:
     """Fill ``imgs`` for two-level pages: explode first-level URLs, join
     the pages table (the sandbox "fetch"), run extraction pass 2 grouped
@@ -229,17 +229,13 @@ def resolve_second_level(
         ).join(F.broadcast(exploded), "fetch_url", "inner")
     else:
         if pages_buckets:
-            import time as _time
-
             from img_spark.sources.tables import PAGES_BUCKET_COL
 
-            t_eager0 = _time.time()
-            mods = batch_buckets(exploded, "fetch_url", pages_buckets)
-            if eager_timer is not None:
-                # an eager Spark job inside the caller's plan window —
-                # report it so Crawler step_times' plan/eager split
-                # stays honest (BENCH/CRAWL_OVERHEAD.md)
-                eager_timer(_time.time() - t_eager0)
+            # an eager Spark job inside the caller's plan window —
+            # ``eager(fn, *args)`` runs it so Crawler step_times'
+            # plan/eager split stays honest (BENCH/CRAWL_OVERHEAD.md)
+            run = eager or (lambda fn, *args: fn(*args))
+            mods = run(batch_buckets, exploded, "fetch_url", pages_buckets)
             pages = pages.filter(F.col(PAGES_BUCKET_COL).isin(mods))
         fetched = pages.select(F.col("url").alias("fetch_url"), "html").join(
             F.broadcast(exploded), "fetch_url", "inner"

@@ -79,8 +79,16 @@ class CuckooFilter:
 
         The (fp, i1, i2) derivation is vectorized over the batch; the
         insert walk stays sequential (intra-batch duplicates must observe
-        earlier inserts)."""
-        hs = np.asarray(hashes, dtype=np.uint64)
+        earlier inserts). ``hashes``: an int64 (the crawl's signed
+        xxhash64) or uint64 array, or Python ints in [-2^63, 2^64) —
+        all read as the same 64 bits, as ``_derive`` does."""
+        if isinstance(hashes, np.ndarray) and hashes.dtype.kind in "iu":
+            wide = np.int64 if hashes.dtype.kind == "i" else np.uint64
+            hs = hashes.astype(wide, copy=False).view(np.uint64)
+        else:
+            hs = np.array(
+                [int(h) & 0xFFFFFFFFFFFFFFFF for h in hashes], dtype=np.uint64
+            )
         out = np.zeros(len(hs), dtype=bool)
         if not len(hs):
             return out

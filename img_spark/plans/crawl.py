@@ -21,25 +21,34 @@ partition pruning); ``read_frontier`` reconstructs the full historical
 view (tests / analytics only). Status counts ride the state write as
 an Observation (zero extra jobs) and accumulate in the manifest.
 
-Per generation g:
- 1. pending rows → per-host top-K dispatch (politeness window over DFS
-    ``path`` order — the one frontier-sized shuffle; same shape as a
-    batch crawler's generate step);
- 2. "fetch" = broadcast(dispatch) equi-join against the pages table →
-    the 100-TB pages scan is ONE pass with no shuffle of the big side
-    (misses → status 'fetch_failed', mirroring main.rs:105-108); in a
-    live deployment this join is replaced by a pooled-HTTP mapInPandas;
- 3. site-config attach = compiled coalesce/when projection (zero shuffle);
- 4. extraction via Arrow mapInPandas (+ second-level join pass);
- 5. discovered next/album URLs → robots check (broadcast join against
-    the compacted per-host rules array — zero candidate shuffles) →
-    partitioned cuckoo-filter probe+insert (groupBy salt, one filter
-    blob per salt, persisted per generation = per-partition lineage);
- 6. the extracted delta and the frontier state are written as TWO
-    CONCURRENT jobs over the cached extraction, then one atomic
-    manifest commit (pending snapshot, terminal-status delta, seen
-    blobs, cumulative status totals); per-host metrics are aggregated
-    on read from the deltas (``metrics_df``); resume from any manifest.
+Per generation g, ``Crawler.step`` runs six phases over one
+``_Generation`` context (the generation's transient state; every frame
+it persists is released on any exit):
+ 1. ``_dispatch``: pending rows → per-host top-K dispatch (politeness
+    window over DFS ``path`` order — the one frontier-sized shuffle;
+    same shape as a batch crawler's generate step);
+ 2. ``_fetch_extract``: "fetch" = broadcast(dispatch) equi-join against
+    the pages table → the 100-TB pages scan is ONE pass with no shuffle
+    of the big side (in a live deployment the join is replaced by a
+    pooled-HTTP mapInPandas, ``_fetch_http``), site-config attach (a
+    compiled coalesce/when projection, zero shuffle), extraction via
+    Arrow mapInPandas (+ second-level join pass);
+ 3. ``_classify_misses``: dispatched URLs without a result become
+    'fetch_failed' (mirroring main.rs:105-108), 'redirected' or
+    'unmodified' terminal rows;
+ 4. ``_admit``: discovered next/album URLs → robots check (broadcast
+    join against the compacted per-host rules array — zero candidate
+    shuffles) → partitioned cuckoo-filter probe+insert (groupBy salt,
+    one filter blob per salt, persisted per generation = per-partition
+    lineage). ``init`` admits the seeds through the same method;
+ 5. ``_write``: the extracted delta and the frontier state are written
+    as TWO CONCURRENT jobs over the cached extraction (the state plan
+    of step 4 is built while the extract write already runs);
+ 6. ``_post``: seen-blob refresh and media download; ``step`` then
+    releases the generation's caches and makes one atomic manifest
+    commit (pending snapshot, terminal-status delta, seen blobs,
+    cumulative status totals). Per-host metrics are aggregated on read
+    from the deltas (``metrics_df``); resume from any manifest.
 
 DFS ordering parity (SURVEY.md §7.5): every frontier row carries ``path``
 = parent path + 8-hex-digit child sequence (albums in document order,
@@ -50,6 +59,7 @@ sequence replays the reference exactly (tests pin this).
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 from dataclasses import dataclass
@@ -334,11 +344,20 @@ def read_frontier(spark: SparkSession, checkpoint_dir: str, generation: int) -> 
     pending snapshot, the newest compaction (merged terminal history, if
     any), and every later generation's terminal-status delta. For tests
     and offline analytics — the crawl loop itself never reads history."""
-    out = read_pending(spark, checkpoint_dir, generation)
-    start = 0
+    return _union(
+        [read_pending(spark, checkpoint_dir, generation)]
+        + _terminal_history(spark, checkpoint_dir, generation)
+    )
+
+
+def _terminal_history(spark, checkpoint_dir: str, generation: int) -> list:
+    """The terminal-status rows through ``generation``, one frame per
+    dir: the newest committed compaction (unless it postdates
+    ``generation``), then every later generation's terminal delta."""
+    parts, start = [], 0
     floor = _compaction_floor(checkpoint_dir)
-    if floor > 0 and floor <= generation + 1:
-        out = out.unionByName(
+    if 0 < floor <= generation + 1:
+        parts.append(
             spark.read.schema(FRONTIER_DDL).parquet(
                 fsio.join(checkpoint_dir, "compacted", f"g{floor - 1}")
             ).select(*_frontier_cols())
@@ -347,13 +366,13 @@ def read_frontier(spark: SparkSession, checkpoint_dir: str, generation: int) -> 
     for g in range(start, generation + 1):
         p = fsio.join(checkpoint_dir, "frontier", f"g{g}")
         if fsio.isdir(p):
-            out = out.unionByName(
+            parts.append(
                 spark.read.schema(FRONTIER_DDL)
                 .parquet(p)
                 .filter(F.col("status") != "pending")
                 .select(*_frontier_cols())
             )
-    return out
+    return parts
 
 
 def metrics_df(spark: SparkSession, checkpoint_dir: str, generation: int) -> DataFrame:
@@ -542,6 +561,54 @@ class CrawlConfig:
     revisit_max_s: float = 0.0
 
 
+class _Generation:
+    """One generation's transient state: created at the top of
+    ``Crawler.step`` (and ``init``), passed to the phases and fetch
+    helpers, dropped when the step returns. Every frame a phase
+    persists is registered with ``keep``; ``step`` calls ``release``
+    in a ``finally``, so a generation that raises anywhere leaves no
+    cached frame behind for its retry."""
+
+    def __init__(self, g: int):
+        self.g = g
+        self.t0 = time.time()
+        self.eager_s = 0.0  # eager Spark work inside the "plan" window
+        self.times: dict = {}  # step_times, filled by the phases
+        self.caches: list = []
+        # strict mode: cross-host redirect targets of first-level
+        # (re-enqueued) and of leaf fetches (dropped, counted)
+        self.redirects: list = []
+        self.leaf_redirects: list = []
+        # revisit mode: 304 urls, validators-delta parts, the sweep's
+        # newest-per-URL reduction, the dispatch batch with its stored
+        # validators, and the sweep's 'disallowed' terminal rows
+        self.unchanged: list = []
+        self.validators: list = []
+        self.val_newest = None
+        self.stored = None
+        self.terminal: list = []
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Register an already persisted frame for ``release``."""
+        self.caches.append(df)
+        return df
+
+    def eager(self, fn, *args):
+        """``fn(*args)``, timed as eager Spark work inside the plan
+        window (robots fetches, bucket-id collects) so step_times'
+        plan/eager split measures what it names."""
+        t = time.time()
+        try:
+            return fn(*args)
+        finally:
+            self.eager_s += time.time() - t
+
+    def release(self) -> None:
+        for df in self.caches:
+            df.unpersist()
+        self.caches = []
+
+
 class Crawler:
     def __init__(
         self,
@@ -629,29 +696,6 @@ class Crawler:
             st for st in (self._validators, self._media_seen)
             if st is not None
         ]
-        # redirect_policy='strict' per-step state: parked cross-host
-        # redirect targets (re-enqueued as candidates) and the fetch
-        # caches backing them (unpersisted at end of step)
-        self._step_redirects: list = []
-        self._strict_caches: list = []
-        # strict mode, second-level fetches: cross-host redirect
-        # targets are dropped by design (leaf fetches) but counted per
-        # generation so the drop is observable (round-6 verdict item 5)
-        self._step_redirects2: list = []
-        # revisit_after_s>0 per-step state: 304 rows (→ status
-        # 'unmodified') and the validators delta to stamp this
-        # generation (fresh fetches + 304 restamps + revisit-disallowed
-        # restamps)
-        self._step_unchanged: list = []
-        self._step_validators: list = []
-        # sweep generations park the store's newest-per-URL reduction
-        # here so the dispatch attach reuses it (one O(store) job per
-        # sweep, not two); the attach parks each dispatch URL's
-        # previous interval here for the AIMD update at delta build
-        self._step_val_newest = None
-        self._step_prev_intervals = None
-        self._step_cond_batch = None
-        self._t_eager = 0.0
         self._plan = self._compile_plan_fragments()
         self._reload_robots()
 
@@ -730,34 +774,35 @@ class Crawler:
                 .when(~F.col("is_new"), F.lit("duplicate"))
                 .otherwise(F.lit("pending"))
             ),
-            # done/failed terminal rows: [:8] + lit(g) + [8:]
-            "done_pre": [
-                "url", F.col("url").alias("url_canon"), "host", "depth",
-                "path",
-                # parent_url is PRESERVED on fetched terminal rows:
-                # it is the crawl's discovered link graph
-                # (operators/linkgraph.link_edges reads it back out),
-                # and erasing it would leave edges only on
-                # duplicate/failed rows. kind stays null — a fetched
-                # row's enqueue kind is spent state.
-                "parent_url",
-                F.lit(None).cast("string").alias("kind"),
-                F.lit("fetched").alias("status"),
-            ],
-            "done_post": [F.lit(0.0).alias("crawl_delay")],
-            "failed_pre": [
-                "url", "url_canon", "host", "depth", "path", "parent_url",
-                "kind", F.lit("fetch_failed").alias("status"),
-            ],
-            "failed_post": ["crawl_delay"],
-            "redirected_pre": [
-                "url", "url_canon", "host", "depth", "path", "parent_url",
-                "kind", F.lit("redirected").alias("status"),
-            ],
-            "unmodified_pre": [
-                "url", "url_canon", "host", "depth", "path", "parent_url",
-                "kind", F.lit("unmodified").alias("status"),
-            ],
+            # terminal rows per status: pre + lit(g) + post
+            "terminal": {
+                "fetched": (
+                    [
+                        "url", F.col("url").alias("url_canon"), "host",
+                        "depth", "path",
+                        # parent_url is PRESERVED on fetched terminal
+                        # rows: it is the crawl's discovered link graph
+                        # (operators/linkgraph.link_edges reads it back
+                        # out), and erasing it would leave edges only
+                        # on duplicate/failed rows. kind stays null — a
+                        # fetched row's enqueue kind is spent state.
+                        "parent_url",
+                        F.lit(None).cast("string").alias("kind"),
+                        F.lit("fetched").alias("status"),
+                    ],
+                    [F.lit(0.0).alias("crawl_delay")],
+                ),
+                **{
+                    st: (
+                        [
+                            "url", "url_canon", "host", "depth", "path",
+                            "parent_url", "kind", F.lit(st).alias("status"),
+                        ],
+                        ["crawl_delay"],
+                    )
+                    for st in ("fetch_failed", "redirected", "unmodified")
+                },
+            },
             "seen_cols": {
                 "h64": url_hash(F.col("url_canon")),
             },
@@ -820,13 +865,6 @@ class Crawler:
         index, and the only driver touch is the is-empty check)."""
         if not self._live_robots:
             return
-        t_eager0 = time.time()
-        try:
-            self._ensure_robots_inner(cand)
-        finally:
-            self._t_eager += time.time() - t_eager0
-
-    def _ensure_robots_inner(self, cand: DataFrame) -> None:
         now = time.time()
         fresh = self._robots_known.filter(
             F.col("fetched_at") > F.lit(now - self.cfg.robots_ttl_s)
@@ -920,7 +958,9 @@ class Crawler:
         self._reload_robots()
 
     # ----------------------------------------------------------- validators
-    def _dispatch_validators(self, disp: DataFrame) -> DataFrame:
+    def _dispatch_validators(
+        self, disp: DataFrame, gen: _Generation
+    ) -> DataFrame:
         """Attach each dispatch URL's stored validators (etag,
         last_modified) for the conditional GET. Scale shape: the store
         scan is bucket-pruned to the dispatch batch's url buckets,
@@ -928,15 +968,13 @@ class Crawler:
         store), and only then reduced newest-per-URL — the groupBy
         shuffles a dispatch-sized set, never the store. A sweep
         generation already reduced the whole store newest-per-URL
-        (persisted on ``self._step_val_newest``) — reuse it instead of
-        a second O(store) scan in the same step."""
+        (``gen.val_newest``) — reuse it instead of a second O(store)
+        scan in the same step."""
         urls = F.broadcast(disp.select("url"))
-        if self._step_val_newest is not None:
-            vals = self._step_val_newest.join(urls, "url", "left_semi")
+        if gen.val_newest is not None:
+            vals = gen.val_newest.join(urls, "url", "left_semi")
         else:
-            t0 = time.time()
-            hit = self._validators.read(batch=disp)
-            self._t_eager += time.time() - t0
+            hit = gen.eager(self._validators.read, disp)
             if hit is None:
                 return disp
             vals = self._validators.reduce(
@@ -949,7 +987,7 @@ class Crawler:
         return disp.join(F.broadcast(vals), "url", "left")
 
     # ------------------------------------------------------ media download
-    def _fetch_media(self, extracted: DataFrame, g: int) -> dict:
+    def _fetch_media(self, extracted: DataFrame, gen: _Generation) -> dict:
         """The reference's download() stage (main.rs:166-279) as a
         per-generation batch: fetch every NEW download_url the
         generation extracted and archive the bytes as WARC under
@@ -984,9 +1022,9 @@ class Crawler:
             .withColumn("host", host_of(F.col("url")))
             .filter(F.col("host").isNotNull())
         )
-        checked = apply_robots_rules(
+        checked = gen.keep(apply_robots_rules(
             cand, self._robots_rules, compiled=self._plan["robots"]
-        ).persist()
+        ).persist())
         n_cand = checked.count()
         allowed = checked.filter(F.col("allowed"))
         # counted HERE, off the live cache — after unpersist this
@@ -1002,7 +1040,7 @@ class Crawler:
         # counts, archive rows, and the definitive-outcome set all
         # come from ONE materialized fetch — no recomputation of the
         # anti-join, no second wire pass
-        got = fetch_pages_http(
+        got = gen.keep(fetch_pages_http(
             new,
             user_agent=self.cfg.http_user_agent,
             timeout_s=self.cfg.http_timeout_s,
@@ -1010,11 +1048,11 @@ class Crawler:
             partitions=self.cfg.partitions,
             retries=self.cfg.http_retries,
             with_status=True,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).persist(StorageLevel.MEMORY_AND_DISK))
         n_attempted = got.count()  # materialize: ONE pass over the wire
         fetched = got.filter(F.col("html").isNotNull())
         n_fetched = fetched.count()
-        out = self._p_media(g)
+        out = self._p_media(gen.g)
         if fsio.isdir(out):
             # a crashed attempt's partial archive: overwrite whole
             fsio.rmtree(out)
@@ -1035,8 +1073,6 @@ class Crawler:
         n_definitive = definitive.count()
         if n_definitive:
             self._media_seen.committed = self._media_seen.append(definitive)
-        got.unpersist()
-        checked.unpersist()
         stats = {
             "media_candidates": n_cand,
             "media_attempted": n_attempted,
@@ -1054,7 +1090,9 @@ class Crawler:
     def _p_media(self, g: int) -> str:
         return fsio.join(self.cfg.media_dir, f"g{g}")
 
-    def _inject_revisits(self, pending: DataFrame, g: int):
+    def _inject_revisits(
+        self, pending: DataFrame, gen: _Generation
+    ) -> DataFrame:
         """Revisit sweep (revisit_after_s>0, every revisit_every
         generations): URLs whose newest validator stamp is older than
         the TTL and that are not already pending re-enter the frontier
@@ -1065,31 +1103,20 @@ class Crawler:
         only NEW links crawl). Disallowed-at-revisit URLs land a fresh
         terminal 'disallowed' row and restamp their validator clock
         (reconsidered after another TTL — rules may change back)
-        instead of re-entering the sweep every generation. Returns
-        (pending ∪ revisits, terminal rows to fold into this
-        generation's delta or None)."""
+        instead of re-entering the sweep every generation (those
+        terminal rows go to ``gen.terminal``). Returns pending ∪
+        revisits."""
         newest = self._validators.live()
         if newest is None:
-            return pending, None
+            return pending
         now = time.time()
         # ONE newest-per-URL reduction serves the whole step: the due
         # filter here and the dispatch validator attach later
-        # (_dispatch_validators) — persisted, unpersisted with the
-        # step's other caches
-        newest = newest.persist()
-        self._strict_caches.append(newest)
-        self._step_val_newest = newest
-        # per-URL adaptive interval (AIMD, see CrawlConfig), CLAMPED
-        # into the current config's bounds so a reconfigured crawl
-        # takes effect immediately (a store stamped under a 1-hour
-        # cadence must not ignore a new 60 s cap for an hour); rows
-        # from a pre-adaptive store fall back to the global TTL
-        base = F.lit(self.cfg.revisit_after_s)
-        mn = F.lit(self.cfg.revisit_min_s or self.cfg.revisit_after_s)
-        mx = F.lit(self.cfg.revisit_max_s or self.cfg.revisit_after_s)
-        eff = F.least(
-            F.greatest(F.coalesce(F.col("interval_s"), base), mn), mx
-        )
+        # (_dispatch_validators)
+        newest = gen.val_newest = gen.keep(newest.persist())
+        # per-URL adaptive interval (AIMD, see CrawlConfig); rows from
+        # a pre-adaptive store fall back to the global TTL
+        eff = self._revisit_clamp("interval_s")[0]
         due = newest.filter(
             F.col("fetched_at") < F.lit(now) - eff
         ).join(pending.select("url"), "url", "left_anti")
@@ -1100,34 +1127,47 @@ class Crawler:
             "interval_s",
             F.lit(None).cast("string").alias("parent_url"),
             F.lit("revisit").alias("kind"),
-            F.lit(g).alias("generation"),
+            F.lit(gen.g).alias("generation"),
         )
-        self._ensure_robots(cand)
-        checked = apply_robots_rules(
-            cand, self._robots_rules, compiled=self._plan["robots"]
-        )
+        gen.eager(self._ensure_robots, cand)
         # three consumers (revisit pending rows, blocked terminal rows,
         # the restamp delta) would each re-run the store scan + newest
-        # groupBy + pending anti-join — persist once, unpersisted with
-        # the step's other fetch caches
-        checked = checked.persist()
-        self._strict_caches.append(checked)
+        # groupBy + pending anti-join — persist once
+        checked = gen.keep(apply_robots_rules(
+            cand, self._robots_rules, compiled=self._plan["robots"]
+        ).persist())
         allowed = checked.filter(F.col("allowed"))
         blocked = checked.filter(~F.col("allowed"))
         revisits = allowed.withColumn(
             "status", F.lit("pending")
         ).select(*_frontier_cols())
-        blocked_terminal = blocked.withColumn(
+        gen.terminal.append(blocked.withColumn(
             "status", F.lit("disallowed")
-        ).select(*_frontier_cols())
+        ).select(*_frontier_cols()))
         # restamp the blocked URLs' clocks (etag/lm/interval preserved)
-        self._step_validators.append(
+        gen.validators.append(
             blocked.select(
                 "url", "host", "depth", "path", "etag", "last_modified",
                 F.lit(now).alias("fetched_at"), "interval_s",
             )
         )
-        return pending.unionByName(revisits), blocked_terminal
+        return pending.unionByName(revisits)
+
+    def _revisit_clamp(self, col: str):
+        """The stored revisit interval ``col`` CLAMPED into the current
+        config's bounds, so a reconfigured crawl takes effect
+        immediately (a store stamped under a 1-hour cadence must not
+        ignore a new 60 s cap for an hour); NULL falls back to
+        revisit_after_s. Returns (clamped, base, min, max) Columns —
+        with both bounds unset they pin to the base (fixed cadence)."""
+        c = self.cfg
+        base = F.lit(c.revisit_after_s)
+        mn = F.lit(c.revisit_min_s or c.revisit_after_s)
+        mx = F.lit(c.revisit_max_s or c.revisit_after_s)
+        return (
+            F.least(F.greatest(F.coalesce(F.col(col), base), mn), mx),
+            base, mn, mx,
+        )
 
     def _manifest_path(self, g: int) -> str:
         return self._p(f"manifest-g{g}.json")
@@ -1150,73 +1190,70 @@ class Crawler:
             F.lit("seed").alias("kind"),
             F.lit(0).alias("generation"),
         )
-        bad = cand.filter(F.col("host").isNull()).withColumns({
-            "status": F.lit("rejected"),
-            "crawl_delay": F.lit(0.0),
-            "allowed": F.lit(False),
-        })
-        # live mode: seed hosts get their robots.txt fetched before the
-        # admission check (a disallowed seed must die at generation 0)
-        self._ensure_robots(cand)
-        ok = apply_robots_rules(
-            cand.filter(F.col("host").isNotNull()), self._robots_rules,
-            compiled=self._plan["robots"],
-        )
-        new = self._seen_filter(ok.unionByName(bad, allowMissingColumns=True), 0)
-        frontier = new.withColumn(
-            "status",
-            F.when(F.col("status").isNotNull(), F.col("status"))
-            .when(~F.col("allowed"), F.lit("disallowed"))
-            .when(~F.col("is_new"), F.lit("duplicate"))
-            .otherwise(F.lit("pending")),
-        ).select(*_frontier_cols())
-        counts0 = self._write_state(frontier, 0)
+        counts0 = self._write_state(self._admit(cand, _Generation(0)), 0)
         self._refresh_seen_blobs(0)
-        stats = self._commit_generation(0, {"seeds": len(seeds)}, counts=counts0)
+        stats = self._commit_generation(0, {"seeds": len(seeds)}, counts0)
         self.generation = 0
         return stats
 
-    def _add_eager(self, seconds: float) -> None:
-        """Callees report eager Spark work done inside the step's
-        pre-write window (see step_times' plan/eager split)."""
-        self._t_eager += seconds
+    def _admit(self, cand: DataFrame, gen: _Generation) -> DataFrame:
+        """Phase 4, admission — the one path from candidate to frontier
+        row (seeds at ``init``, discovered and redirect URLs each
+        step): a row without a host is 'rejected'; live mode first
+        fetches robots.txt for hosts it has no fresh rules for (their
+        Disallow decides status — a disallowed seed dies at generation
+        0 — and their Crawl-delay rides the frontier row into the next
+        dispatch: the round-4 hole admitted such hosts allow-all with
+        zero delay); the rules mark 'disallowed', the seen set
+        'duplicate', and the rest enter as 'pending'."""
+        P = self._plan
+        bad = cand.filter(F.col("host").isNull()).withColumns(P["bad_cols"])
+        gen.eager(self._ensure_robots, cand)
+        ok = apply_robots_rules(
+            cand.filter(F.col("host").isNotNull()), self._robots_rules,
+            compiled=P["robots"],
+        )
+        checked = self._seen_filter(
+            ok.unionByName(bad, allowMissingColumns=True), gen.g
+        )
+        return checked.withColumn("status", P["status_col"]).select(
+            *_frontier_cols()
+        )
 
     # ---------------------------------------------------------------- fetch
     def _fetch_http(
-        self,
-        batch: DataFrame,
-        enqueue_redirects: bool = True,
-        conditional: bool = False,
+        self, batch: DataFrame, gen: _Generation, leaf: bool = False,
     ) -> DataFrame:
         """Pooled-HTTP fetch seam (fetch_mode='http'): a (url[, host,
         crawl_delay]) batch → (url, html, host). Used for both the
-        first-level dispatch fetch and the two-level second pass; a
-        batch arriving without crawl_delay (the second pass sends bare
-        URLs) gets it from the compacted robots rules so the per-host
-        pacing holds on BOTH levels. Disallow rules are deliberately
-        NOT applied here: the table path fetches whatever first-level
-        URL exists in the pages table, and the two paths are pinned
-        byte-identical — robots admission for frontier URLs happens at
-        enqueue time instead.
+        first-level dispatch fetch and the two-level second pass
+        (``leaf=True``); a batch arriving without crawl_delay (the
+        second pass sends bare URLs) gets it from the compacted robots
+        rules so the per-host pacing holds on BOTH levels. Disallow
+        rules are deliberately NOT applied here: the table path
+        fetches whatever first-level URL exists in the pages table, and
+        the two paths are pinned byte-identical — robots admission for
+        frontier URLs happens at enqueue time instead.
 
         redirect_policy='strict': the fetch carries a ``redirect``
-        column; targets of first-level cross-host 3xx are parked on
-        ``self._step_redirects`` (a persisted split of the SAME fetch
-        — one HTTP request per URL either way) for ``step`` to
-        re-enqueue through admission, and the returned frame keeps
-        the 3-column shape every downstream consumer expects.
-        Second-level calls pass ``enqueue_redirects=False`` (leaf
-        fetches — their targets are dropped, see CrawlConfig; the
-        drop is counted per generation via ``self._step_redirects2``).
+        column; cross-host 3xx targets are parked on ``gen.redirects``
+        (a persisted split of the SAME fetch — one HTTP request per URL
+        either way) for ``step`` to re-enqueue through admission, and
+        the returned frame keeps the 3-column shape every downstream
+        consumer expects. Leaf targets go to ``gen.leaf_redirects``
+        instead: dropped, never enqueued (see CrawlConfig), counted
+        per generation.
 
-        ``conditional=True`` (revisit_after_s>0, first-level dispatch
-        only): stored validators are attached per URL, 304 rows split
-        onto ``self._step_unchanged`` (→ status 'unmodified'), and the
-        fresh validators of every 200/304 row are parked on
-        ``self._step_validators`` for the generation's validators
-        delta."""
+        revisit_after_s>0 (first level only): stored validators are
+        attached per URL, 304 rows split onto ``gen.unchanged`` (→
+        status 'unmodified'), and the fresh validators of every 200/304
+        row are parked on ``gen.validators`` for the generation's
+        validators delta."""
+        from pyspark import StorageLevel
+
         from img_spark.operators.fetch import fetch_pages_http
 
+        conditional = self._conditional and not leaf
         if "host" not in batch.columns:
             batch = batch.withColumn("host", host_of(F.col("url")))
         if self._live_robots:
@@ -1225,7 +1262,7 @@ class Crawler:
             # wrong after a TTL refresh and absent for checkpoints
             # resumed from before the rules existed — re-derive it
             # (and fetch rules for any still-unknown host) every batch
-            self._ensure_robots(batch)
+            gen.eager(self._ensure_robots, batch)
             batch = batch.drop("crawl_delay")
         if "crawl_delay" not in batch.columns:
             batch = apply_robots_rules(
@@ -1236,15 +1273,9 @@ class Crawler:
             # validators-delta build joins back to it for each URL's
             # PREVIOUS interval (the AIMD update input) — without the
             # persist that join would re-run the store semi-scan
-            batch = self._dispatch_validators(batch).persist()
-            self._strict_caches.append(batch)
-            # kept for the failed-revisit restamp in step(): a stored
-            # URL whose refetch fails must still advance its clock
-            self._step_cond_batch = batch
-            if "interval_s" in batch.columns:
-                self._step_prev_intervals = batch.select(
-                    "url", "interval_s"
-                )
+            batch = gen.keep(self._dispatch_validators(batch, gen).persist())
+            if "stored" in batch.columns:
+                gen.stored = batch
         out = fetch_pages_http(
             batch,
             user_agent=self.cfg.http_user_agent,
@@ -1256,40 +1287,33 @@ class Crawler:
             conditional=conditional,
         )
         strict = self.cfg.redirect_policy == "strict"
-        if strict or conditional:
-            from pyspark import StorageLevel
-
-            # persist the raw fetch ONCE: the page rows and the
-            # redirect/unchanged/validator rows are multiple consumers,
-            # and a live fetch must never re-run per consumer (same
-            # contract as step's fetched_cache). Unpersisted at end of
-            # step.
-            out = out.persist(StorageLevel.MEMORY_AND_DISK)
-            self._strict_caches.append(out)
+        if not (strict or conditional):
+            return out
+        # persist the raw fetch ONCE: the page rows and the
+        # redirect/unchanged/validator rows are multiple consumers, and
+        # a live fetch must never re-run per consumer (same contract as
+        # _fetch_extract's fetch cache)
+        out = gen.keep(out.persist(StorageLevel.MEMORY_AND_DISK))
         if strict:
-            redirects = out.filter(F.col("redirect").isNotNull()).select(
-                F.col("url").alias("parent_url"),
-                F.col("redirect").alias("url"),
+            (gen.leaf_redirects if leaf else gen.redirects).append(
+                out.filter(F.col("redirect").isNotNull()).select(
+                    F.col("url").alias("parent_url"),
+                    F.col("redirect").alias("url"),
+                )
             )
-            (self._step_redirects if enqueue_redirects
-             else self._step_redirects2).append(redirects)
         if conditional:
-            self._step_unchanged.append(
-                out.filter(F.col("unchanged")).select("url")
-            )
+            gen.unchanged.append(out.filter(F.col("unchanged")).select("url"))
             # fresh stamps for everything the wire confirmed: 200
             # bodies carry the response's validators, 304s restamp
             # the (possibly refreshed) ones we sent
-            self._step_validators.append(
+            gen.validators.append(
                 out.filter(
                     F.col("html").isNotNull() | F.col("unchanged")
                 ).select("url", "host", "etag", "last_modified", "unchanged")
             )
-        if strict or conditional:
-            out = out.filter(F.col("html").isNotNull()).select(
-                "url", "html", "host"
-            )
-        return out
+        return out.filter(F.col("html").isNotNull()).select(
+            "url", "html", "host"
+        )
 
     # ------------------------------------------------------------- backoff
     def _backoff_budgets(self) -> DataFrame | None:
@@ -1326,23 +1350,47 @@ class Crawler:
 
     # ---------------------------------------------------------------- step
     def step(self) -> dict:
-        t_step0 = time.time()
-        g = self.generation + 1
-        self._step_redirects, self._strict_caches = [], []
-        self._step_redirects2 = []
-        self._step_unchanged, self._step_validators = [], []
-        self._step_val_newest = None
-        self._step_prev_intervals = None
-        self._step_cond_batch = None
-        self._t_eager = 0.0  # eager Spark work inside the "plan" window
+        """Advance the crawl one generation: the phases of the module
+        docstring over one ``_Generation``, then the atomic manifest
+        commit. Every frame a phase persisted is released on any exit,
+        an exception included — a retried generation must not inherit
+        the failed attempt's caches for the life of the session."""
+        gen = _Generation(self.generation + 1)
+        try:
+            dispatch, held = self._dispatch(gen)
+            results = self._fetch_extract(dispatch, gen)
+            terminal, red_all = self._classify_misses(results, dispatch, gen)
+            extracted, counts = self._write(
+                gen, results, dispatch, held, terminal, red_all
+            )
+            t_post0 = time.time()
+            extra = self._post(extracted, gen)
+        finally:
+            gen.release()
+        gen.times["post"] = time.time() - t_post0
+        # per-phase wall times ride in the manifest (S8 lineage + the
+        # feedback loop for tuning per-generation overhead)
+        self.last_step_times = {k: round(v, 3) for k, v in gen.times.items()}
+        stats = self._commit_generation(
+            gen.g, {"step_times": self.last_step_times, **extra}, counts
+        )
+        self.generation = gen.g
+        for st in self._gated_stores:  # after the commit (see DeltaStore)
+            st.maybe_compact()
+        return stats
+
+    def _dispatch(self, gen: _Generation):
+        """Phase 1: the previous generation's pending rows (plus the
+        revisits a sweep generation re-enqueues) → per-host top-K
+        dispatch. Returns (dispatch, held): the rows fetched this
+        generation and the rows that stay pending."""
         # only the status=pending subdir of the previous generation is
         # opened — the terminal-status history is never touched
         pending = read_pending(
             self.spark, self.cfg.checkpoint_dir, self.generation
         )
-        revisit_blocked = None
-        if self._conditional and g % max(self.cfg.revisit_every, 1) == 0:
-            pending, revisit_blocked = self._inject_revisits(pending, g)
+        if self._conditional and gen.g % max(self.cfg.revisit_every, 1) == 0:
+            pending = self._inject_revisits(pending, gen)
         if self.host_scores is not None:
             # link-graph (or operator-supplied) priority: attach each
             # pending row's host score so priority_score expressions
@@ -1391,59 +1439,63 @@ class Crawler:
         # instead of re-running the pending scan + window per consumer;
         # it is host_budget-bounded + held rows (pending-sized, the
         # same data the loop reads/writes anyway)
-        marked = marked.persist()
-        dispatch = marked.filter(F.col("dispatch")).drop("dispatch")
-        held = marked.filter(~F.col("dispatch")).drop("dispatch")
+        marked = gen.keep(marked.persist())
+        return (
+            marked.filter(F.col("dispatch")).drop("dispatch"),
+            marked.filter(~F.col("dispatch")).drop("dispatch"),
+        )
 
-        # fetch: INNER join with the small dispatch batch broadcast —
-        # the pages table is scanned exactly once, with no shuffle of the
-        # big side (a left-outer join could NOT broadcast its outer side
-        # and would fall back to a full sort-merge shuffle of pages).
-        # Misses are recovered afterwards with a batch-sized anti-join.
-        # fetch_mode='http' swaps the join for the pooled-HTTP
-        # mapInPandas variant — identical (url, html, host) shape, so
-        # everything downstream (including the miss anti-join) is
-        # unchanged (main.rs:83-111 is the reference behavior).
-        pages = self.pages
-        if self.cfg.pages_buckets and self.cfg.fetch_mode != "http":
-            # bucket-pruned scan: dispatch is host_budget-bounded (small
-            # enough to cache at any scale); its distinct url-hash
-            # buckets become a partition filter so the fetch only opens
-            # the files this batch's URLs can live in
-            from img_spark.sources.tables import PAGES_BUCKET_COL
+    def _fetch_extract(
+        self, dispatch: DataFrame, gen: _Generation
+    ) -> DataFrame:
+        """Phase 2: fetch the dispatch batch (archived as WARC when
+        ``archive_dir`` is set), attach site config, extract (+ the
+        second-level pass). Returns the per-page results joined back to
+        their frontier rows, cached: the extract and state writes both
+        consume them.
 
-            t_eager0 = time.time()
-            mods = batch_buckets(dispatch, "url", self.cfg.pages_buckets)
-            self._t_eager += time.time() - t_eager0
-            pages = pages.filter(F.col(PAGES_BUCKET_COL).isin(mods))
-        fetched_cache = None
-        fetch_pinned = False  # strict mode: raw fetch persisted upstream
+        Table mode fetches with an INNER join against the small
+        dispatch batch broadcast — the pages table is scanned exactly
+        once, with no shuffle of the big side (a left-outer join could
+        NOT broadcast its outer side and would fall back to a full
+        sort-merge shuffle of pages); ``_classify_misses`` recovers the
+        misses with a batch-sized anti-join. fetch_mode='http' swaps
+        the join for ``_fetch_http`` — identical (url, html, host)
+        shape, so everything downstream is unchanged (main.rs:83-111
+        is the reference behavior)."""
+        from pyspark import StorageLevel
+
         if self.cfg.fetch_mode == "http":
-            from pyspark import StorageLevel
-
             fetched = self._fetch_http(
-                dispatch.select("url", "host", "crawl_delay"),
-                conditional=self._conditional,
+                dispatch.select("url", "host", "crawl_delay"), gen
             )
-            if self.cfg.redirect_policy == "strict" or self._conditional:
-                # _fetch_http already persisted the RAW fetch (html +
-                # redirect/validator rows, tracked in _strict_caches) —
-                # the filtered projection recomputes from that cache
-                # for every consumer; persisting it again would hold
-                # every page body in TWO cache entries per generation
-                fetch_pinned = True
-            else:
+            if not (self.cfg.redirect_policy == "strict" or self._conditional):
                 # persist UNCONDITIONALLY (disk-backed): the extracted
                 # and state sinks are two concurrent consumers, and a
                 # task retry or cache eviction must never re-execute a
                 # live fetch mid-generation — re-hitting hosts breaks
                 # pacing and a replayed fetch can return different rows
                 # on shuffle replay (ONE fetch per URL per generation,
-                # archived or not)
-                fetched = fetched_cache = fetched.persist(
-                    StorageLevel.MEMORY_AND_DISK
+                # archived or not). In strict/revisit mode _fetch_http
+                # already persisted the RAW fetch; persisting this
+                # projection again would hold every body twice.
+                fetched = gen.keep(
+                    fetched.persist(StorageLevel.MEMORY_AND_DISK)
                 )
         else:
+            pages = self.pages
+            if self.cfg.pages_buckets:
+                # bucket-pruned scan: dispatch is host_budget-bounded
+                # (small enough to cache at any scale); its distinct
+                # url-hash buckets become a partition filter so the
+                # fetch only opens the files this batch's URLs can
+                # live in
+                from img_spark.sources.tables import PAGES_BUCKET_COL
+
+                mods = gen.eager(
+                    batch_buckets, dispatch, "url", self.cfg.pages_buckets
+                )
+                pages = pages.filter(F.col(PAGES_BUCKET_COL).isin(mods))
             # the scan reads warc_ts only when archiving needs it —
             # otherwise column pruning keeps the fetch join two-column
             cols = ["url", "html"] + (
@@ -1455,85 +1507,72 @@ class Crawler:
         if self.cfg.archive_dir:
             from img_spark.operators.sink import write_warc_archives
 
-            if fetched_cache is None and not fetch_pinned:
-                # table mode: the archive write and the extraction are
-                # two consumers — persist so pages is scanned once
-                fetched = fetched_cache = fetched.persist()
-            arch = fetched
-            if "warc_ts" not in arch.columns:
+            if self.cfg.fetch_mode == "http":
                 # live fetch: capture time IS the fetch time
-                arch = arch.withColumn("warc_ts", F.current_timestamp())
+                arch = fetched.withColumn("warc_ts", F.current_timestamp())
+            else:
+                # the archive write and the extraction are two
+                # consumers — persist so pages is scanned once
+                fetched = arch = gen.keep(fetched.persist())
             write_warc_archives(
-                arch, fsio.join(self.cfg.archive_dir, f"g{g}")
+                arch, fsio.join(self.cfg.archive_dir, f"g{gen.g}")
             )
             fetched = fetched.drop("warc_ts")
-        withcfg = attach_site_config(fetched, self._cfg_col)
-
         results = extract_pages(
-            withcfg, album_policy=self.cfg.album_policy,
+            attach_site_config(fetched, self._cfg_col),
+            album_policy=self.cfg.album_policy,
             main_text=self.cfg.main_text,
         )
-        first_level = None
         if self.has_two_level:
             # cache the first-level extraction: the second-level pass
             # reads it twice (bucket derivation + the merge self-join) —
             # without the cache the Arrow extract UDF would run twice
-            first_level = results.persist()
+            first_level = gen.keep(results.persist())
             results = resolve_second_level(
                 first_level, self.pages, pages_buckets=self.cfg.pages_buckets,
                 compiled=self._plan["second"],
-                eager_timer=self._add_eager,
+                eager=gen.eager,
                 fetch_fn=(
-                    # leaf fetches: strict-mode cross-host redirects
-                    # are dropped, never enqueued (see CrawlConfig)
-                    (lambda b: self._fetch_http(b, enqueue_redirects=False))
+                    functools.partial(self._fetch_http, gen=gen, leaf=True)
                     if self.cfg.fetch_mode == "http" else None
                 ),
             )
-        results = results.join(
+        return gen.keep(results.join(
             F.broadcast(dispatch.select(
                 "url", "host", "depth", "path", "parent_url"
             )),
             "url", "left",
-        )
-        results.cache()
+        ).cache())
+
+    def _classify_misses(
+        self, results: DataFrame, dispatch: DataFrame, gen: _Generation
+    ):
+        """Phase 3: a dispatched URL without a result row is
+        'fetch_failed' (absent from the pages table, main.rs:105-108),
+        unless it redirected cross-host in strict mode ('redirected' —
+        not a failure, see STATUSES) or answered 304 ('unmodified':
+        CONFIRMED fresh, never re-extracted, never fed to the backoff
+        breaker). Returns the terminal (frame, status) pairs — the
+        fetched pages first — and the strict-mode redirect targets
+        (None otherwise)."""
         failed = dispatch.join(
             F.broadcast(results.select("url")), "url", "left_anti"
-        )  # dispatched URLs absent from the pages table (main.rs:105-108)
-        redirected = None
-        red_all = None
-        if self._step_redirects:
-            # strict mode: fold the per-fetch redirect batches ONCE —
-            # both the failed/redirected split here and the candidate
-            # re-enqueue below consume the same union
-            red_all = self._step_redirects[0]
-            for x in self._step_redirects[1:]:
-                red_all = red_all.unionByName(x)
-            # a cross-host-redirecting URL emitted no result row, but
-            # it is status='redirected', not a fetch failure (see
-            # STATUSES) — split it out of the miss set
+        )
+        redirected = unmodified = None
+        # strict mode: the per-fetch redirect batches fold ONCE — this
+        # split and the candidate re-enqueue consume the same union
+        red_all = _union(gen.redirects)
+        if red_all is not None:
             red_parents = F.broadcast(
                 red_all.select(F.col("parent_url").alias("url")).distinct()
             )
             redirected = failed.join(red_parents, "url", "left_semi")
             failed = failed.join(red_parents, "url", "left_anti")
-        unmodified = None
-        if self._step_unchanged:
-            # 304 rows emitted no result row either, but the page is
-            # CONFIRMED fresh — split it out of the miss set into
-            # status='unmodified' (never re-extracted, never fed to
-            # the backoff breaker)
-            u_all = self._step_unchanged[0]
-            for x in self._step_unchanged[1:]:
-                u_all = u_all.unionByName(x)
-            u_urls = F.broadcast(u_all.distinct())
+        if gen.unchanged:
+            u_urls = F.broadcast(_union(gen.unchanged).distinct())
             unmodified = failed.join(u_urls, "url", "left_semi")
             failed = failed.join(u_urls, "url", "left_anti")
-        if (
-            self._conditional
-            and self._step_cond_batch is not None
-            and "stored" in self._step_cond_batch.columns
-        ):
+        if gen.stored is not None:
             # failed-revisit restamp: a STORED URL whose refetch failed
             # (transport error, or cross-host redirect in strict mode)
             # writes no 200/304 validator row, so without a restamp its
@@ -1548,14 +1587,9 @@ class Crawler:
             miss = failed.select("url")
             if redirected is not None:
                 miss = miss.unionByName(redirected.select("url"))
-            base = F.lit(self.cfg.revisit_after_s)
-            mxf = F.lit(self.cfg.revisit_max_s or self.cfg.revisit_after_s)
-            mnf = F.lit(self.cfg.revisit_min_s or self.cfg.revisit_after_s)
-            prev_f = F.least(
-                F.greatest(F.coalesce(F.col("interval_s"), base), mnf), mxf
-            )
-            self._step_validators.append(
-                self._step_cond_batch.filter(F.col("stored"))
+            prev, _, _, mx = self._revisit_clamp("interval_s")
+            gen.validators.append(
+                gen.stored.filter(F.col("stored"))
                 .join(F.broadcast(miss), "url", "left_semi")
                 .join(
                     F.broadcast(dispatch.select("url", "depth", "path")),
@@ -1565,324 +1599,236 @@ class Crawler:
                     "url", "host", "depth", "path", "etag",
                     "last_modified",
                     F.lit(time.time()).alias("fetched_at"),
-                    F.least(prev_f * 2, mxf).alias("interval_s"),
+                    F.least(prev * 2, mx).alias("interval_s"),
                 )
             )
+        terminal = [
+            (results, "fetched"), (failed, "fetch_failed"),
+            (redirected, "redirected"), (unmodified, "unmodified"),
+        ]
+        return terminal, red_all
 
-        # ---- extracted sink delta (explode imgs)
-        # per-page counters ride along (constant per page, repeated per
-        # img row) — the per-host metrics table is a read-side aggregate
-        # over this delta instead of a third write job per generation.
-        # Column lists precompiled in _compile_plan_fragments; only the
-        # generation literal is fresh per step.
+    def _discovered(
+        self, results: DataFrame, dispatch: DataFrame, red_all, g: int
+    ) -> DataFrame:
+        """Candidate rows found by this generation: albums (document
+        order), then next links, then — strict redirect policy — the
+        parked cross-host redirect targets as kind='redirect'. Every
+        kind goes through the same admission (``_admit``)."""
         P = self._plan
-        extracted = results.select(
-            *P["ext1_pre"], F.lit(g).alias("generation"), *P["ext1_post"]
-        ).select(*P["ext2"])
-        # downloads sink columns (S4) ride along in the same delta —
-        # one write per generation instead of two; the downloads "table"
-        # is the non-null-filename projection of extracted
+        albums = results.select(*P["albums_cols"]).withColumns(
+            P["albums_with"]
+        )
+        nxt = results.filter(F.col("next_url") != "").select(
+            *P["nxt_cols"]
+        ).withColumns(P["nxt_with"])
+        cand = albums.unionByName(nxt).select(
+            *P["cand_pre"], F.lit(g).alias("generation")
+        )
+        if red_all is None:
+            return cand
+        # depth/path come from the redirecting frontier row (fan-out is
+        # 1 per parent, so the fixed 'fffffffe' child seq is unique and
+        # sorts after every album/next child)
+        return cand.unionByName(red_all.join(
+            F.broadcast(dispatch.select(
+                F.col("url").alias("parent_url"), "depth",
+                F.col("path").alias("ppath"),
+            )),
+            "parent_url", "inner",
+        ).select(
+            F.col("url"),
+            F.col("url").alias("url_canon"),
+            host_of(F.col("url")).alias("host"),
+            "depth",
+            F.concat(F.col("ppath"), F.lit("fffffffe")).alias("path"),
+            "parent_url",
+            F.lit("redirect").alias("kind"),
+            F.lit(g).alias("generation"),
+        ))
+
+    def _write(
+        self, gen: _Generation, results: DataFrame, dispatch: DataFrame,
+        held: DataFrame, terminal: list, red_all,
+    ):
+        """Phase 5: the extracted delta, the frontier state (held ∪
+        terminal delta ∪ admitted candidates) and — revisit mode — the
+        validators delta, written as concurrent jobs. Returns
+        (extracted, state-write status counts).
+
+        The extracted-delta write is submitted FIRST, before the
+        candidate/state chains are even constructed (r8): the extract
+        job's stages (broadcast build -> fetch join -> Arrow extract ->
+        explode -> write) execute on the cluster WHILE the driver
+        spends its ~0.5-1 s of py4j/Catalyst analysis building the
+        frontier-state plan — overlapping the two instead of paying
+        plan-then-execute serially. The state write follows, so the
+        write wall is max(extract, state) instead of their sum, and the
+        state job's probe shuffle overlaps the extract job's commit
+        I/O. The shared ``results`` cache fills as the first job's
+        tasks complete; under the default FIFO scheduler the extract
+        job (submitted first) holds the cores for its extraction stage,
+        so the state job's results-dependent tasks mostly read the
+        cache — duplicate extraction is bounded by the scheduling tail,
+        not the batch (measured: concurrent beats
+        materialize-then-write by ~20% per generation).
+
+        Every exit after the first submit — an exception while the
+        state plan is still being built included — waits for the
+        submitted writes and shuts the pool down: a retried generation
+        must never race an orphaned overwrite of extracted/g{g}. A
+        completed-but-uncommitted extracted dir is exactly the
+        crash-mid-write case the manifest visibility contract covers."""
+        from concurrent.futures import ThreadPoolExecutor
+
         from img_spark.operators.sink import with_download_columns
 
-        extracted = with_download_columns(extracted, P["dl_cols"])
-
-        # submit the extracted-delta write NOW, before the candidate/
-        # state chains are even constructed (r8): the extract job's
-        # stages (broadcast build -> fetch join -> Arrow extract ->
-        # explode -> write) execute on the cluster WHILE the driver
-        # spends its ~0.5-1 s of py4j/Catalyst analysis building the
-        # frontier-state plan — overlapping the two instead of paying
-        # plan-then-execute serially. FIFO submission order (extract
-        # first) is unchanged, so the cache-fill behavior the old
-        # simultaneous submit relied on is identical. A construction
-        # error below propagates only after the write has finished (see
-        # the try), and a completed-but-uncommitted extracted dir is
-        # exactly the crash-mid-write case the manifest visibility
-        # contract covers.
-        import concurrent.futures
-
-        def _write_extracted():
-            t = time.time()
-            extracted.write.mode("overwrite").parquet(
-                self._p("extracted", f"g{g}")
-            )
-            return time.time() - t
-
-        pool = concurrent.futures.ThreadPoolExecutor(3)
+        g, P = gen.g, self._plan
+        # per-page counters ride along (constant per page, repeated per
+        # img row) — the per-host metrics table is a read-side
+        # aggregate over this delta (metrics_df) instead of a third
+        # write job; the downloads sink columns (S4) ride along too
+        # (the downloads "table" is the non-null-filename projection).
+        # Column lists precompiled; only the generation literal is
+        # fresh per step.
+        extracted = with_download_columns(
+            results.select(
+                *P["ext1_pre"], F.lit(g).alias("generation"), *P["ext1_post"]
+            ).select(*P["ext2"]),
+            P["dl_cols"],
+        )
+        ext_path = self._p("extracted", f"g{g}")
+        pool = ThreadPoolExecutor(3)
         t_submit0 = time.time()
-        fut_e = pool.submit(_write_extracted)
-        # every exit from here on — an exception while the state plan
-        # is still being built included — waits for the submitted
-        # writes and shuts the pool down: a retried generation must
-        # never race an orphaned overwrite of extracted/g{g}
+        fut_e = pool.submit(
+            _timed, lambda: extracted.write.mode("overwrite").parquet(ext_path)
+        )
         try:
-            # ---- discovered candidates: albums (doc order) then next
-            albums = results.select(*P["albums_cols"]).withColumns(
-                P["albums_with"]
+            new_rows = self._admit(
+                self._discovered(results, dispatch, red_all, g), gen
             )
-            nxt = results.filter(F.col("next_url") != "").select(
-                *P["nxt_cols"]
-            ).withColumns(P["nxt_with"])
-
-            cand = albums.unionByName(nxt).select(
-                *P["cand_pre"], F.lit(g).alias("generation")
-            )
-            if red_all is not None:
-                # strict redirect policy: parked cross-host targets become
-                # candidates of kind='redirect' — same admission path as
-                # albums/next (robots check + seen-set below). depth/path
-                # come from the redirecting frontier row (fan-out is 1 per
-                # parent, so the fixed 'fffffffe' child seq is unique and
-                # sorts after every album/next child)
-                red_cand = red_all.join(
-                    F.broadcast(dispatch.select(
-                        F.col("url").alias("parent_url"), "depth",
-                        F.col("path").alias("ppath"),
-                    )),
-                    "parent_url", "inner",
-                ).select(
-                    F.col("url"),
-                    F.col("url").alias("url_canon"),
-                    host_of(F.col("url")).alias("host"),
-                    "depth",
-                    F.concat(F.col("ppath"), F.lit("fffffffe")).alias("path"),
-                    "parent_url",
-                    F.lit("redirect").alias("kind"),
-                    F.lit(g).alias("generation"),
-                )
-                cand = cand.unionByName(red_cand)
-            bad = cand.filter(F.col("host").isNull()).withColumns(
-                P["bad_cols"]
-            )
-            # live mode: hosts discovered THIS generation get their
-            # robots.txt fetched before the admission check below — their
-            # Disallow rules decide status and their Crawl-delay rides the
-            # frontier row into the next dispatch (the round-4 hole: such
-            # hosts were admitted allow-all with zero delay)
-            self._ensure_robots(cand)
-            ok = apply_robots_rules(
-                cand.filter(F.col("host").isNotNull()), self._robots_rules,
-                compiled=self._plan["robots"],
-            )
-            checked = self._seen_filter(
-                ok.unionByName(bad, allowMissingColumns=True), g
-            )
-            new_rows = checked.withColumn(
-                "status", P["status_col"]
-            ).select(*_frontier_cols())
-
-            # ---- pending snapshot (rewritten, shrinks) + terminal delta
-            # (append)
-            done = results.select(
-                *P["done_pre"], F.lit(g).alias("generation"), *P["done_post"]
-            ).unionByName(
-                failed.select(
-                    *P["failed_pre"], F.lit(g).alias("generation"),
-                    *P["failed_post"],
-                )
-            )
-            if redirected is not None:
-                done = done.unionByName(
-                    redirected.select(
-                        *P["redirected_pre"], F.lit(g).alias("generation"),
-                        *P["failed_post"],
-                    )
-                )
-            if unmodified is not None:
-                done = done.unionByName(
-                    unmodified.select(
-                        *P["unmodified_pre"], F.lit(g).alias("generation"),
-                        *P["failed_post"],
-                    )
-                )
-            if revisit_blocked is not None:
-                done = done.unionByName(revisit_blocked)
-            # ONE status-partitioned write per generation: rewritten pending
-            # (held + newly discovered) + this generation's terminal delta
-            # (done already unions the fetch_failed rows). History ('rest')
-            # is NOT rewritten — it lives in earlier generations' dirs.
+            # ONE status-partitioned write per generation: rewritten
+            # pending (held + newly admitted) + this generation's
+            # terminal delta. History is NOT rewritten — it lives in
+            # earlier generations' dirs.
+            done = self._terminal_rows(terminal, gen)
             state = (
                 held.select(*_frontier_cols())
                 .unionByName(done.select(*_frontier_cols()))
                 .unionByName(new_rows)
             )
-
-            # the extracted sink and the frontier-state sink are
-            # INDEPENDENT consumers of the cached extraction — the extract
-            # write was submitted above (overlapping the state-plan
-            # construction); the state write is submitted here so the
-            # per-generation wall is max(extract, state) instead of their
-            # sum, and the state job's probe shuffle overlaps the extract
-            # job's commit I/O. The shared `results` cache fills as the
-            # first job's tasks complete; under the default FIFO scheduler
-            # the extract job (submitted first) holds the cores for its
-            # extraction stage, so the state job's results-dependent tasks
-            # mostly read the cache — duplicate extraction is bounded by
-            # the scheduling tail, not the batch (measured: concurrent
-            # beats materialize-then-write by ~20% per generation).
-            # Exceptions propagate via futures.
-            def _write_frontier():
-                t = time.time()
-                counts = self._write_state(state, g)
-                return counts, time.time() - t
-
-            # revisit mode: this generation's validators delta — response
-            # validators of every 200/304 (depth/path from the dispatch
-            # row) plus the revisit-disallowed restamps from the sweep
-            val_delta = None
-            if self._step_validators:
-                now_stamp = time.time()
-                # AIMD interval update (CrawlConfig.revisit_min_s/max_s):
-                # first fetch starts at the base TTL, a 304 doubles the
-                # previous interval (capped), changed content halves it
-                # (floored). With both bounds defaulted to the base this
-                # collapses to a fixed cadence.
-                base = F.lit(self.cfg.revisit_after_s)
-                mn = F.lit(self.cfg.revisit_min_s or self.cfg.revisit_after_s)
-                mx = F.lit(self.cfg.revisit_max_s or self.cfg.revisit_after_s)
-                prev = F.col("prev_interval")
-                # clamp the previous interval into the CURRENT bounds
-                # first, so reconfigured min/max take effect immediately
-                # instead of decaying in over many visits
-                prev_c = F.least(F.greatest(F.coalesce(prev, base), mn), mx)
-                interval = (
-                    F.when(prev.isNull(), base)
-                    .when(F.col("unchanged"), F.least(prev_c * 2, mx))
-                    .otherwise(F.greatest(prev_c / 2, mn))
-                )
-                prev_ints = (
-                    self._step_prev_intervals
-                    if self._step_prev_intervals is not None
-                    else dispatch.select(
-                        "url", F.lit(None).cast("double").alias("interval_s")
-                    )
-                ).select("url", F.col("interval_s").alias("prev_interval"))
-                parts = []
-                for v in self._step_validators:
-                    if "fetched_at" in v.columns:
-                        parts.append(v)  # sweep restamps: already complete
-                    else:
-                        parts.append(
-                            v.join(
-                                F.broadcast(
-                                    dispatch.select("url", "depth", "path")
-                                ),
-                                "url", "inner",
-                            ).join(
-                                F.broadcast(prev_ints), "url", "left"
-                            ).select(
-                                "url", "host", "depth", "path", "etag",
-                                "last_modified",
-                                F.lit(now_stamp).alias("fetched_at"),
-                                interval.alias("interval_s"),
-                            )
-                        )
-                val_delta = parts[0]
-                for x in parts[1:]:
-                    val_delta = val_delta.unionByName(x)
-
-            def _write_validators():
-                t = time.time()
-                idx = self._validators.append(val_delta)
-                return time.time() - t, idx
-
-            t0 = time.time()
+            val_delta = self._validators_delta(dispatch, gen)
             # plan = pure driver-side construction (py4j + eager
-            # Catalyst analysis); eager Spark work inside the window
-            # (_ensure_robots fetches, bucket-id collects) is accounted
-            # separately so the attribution in BENCH/CRAWL_OVERHEAD.md
-            # measures what it names. Since r8 the extract write runs
-            # UNDER the tail of this window (submitted right after
-            # `extracted` was built), so `plan` and `writes_wall`
-            # overlap by (t0 - t_submit0); `writes_wall` is measured
-            # from the FIRST submit to keep it the true wall of the
-            # write phase.
-            t_plan = t0 - t_step0 - self._t_eager
-            t_validators = 0.0
-            fut_s = pool.submit(_write_frontier)
-            fut_v = (
-                pool.submit(_write_validators)
-                if val_delta is not None else None
-            )
-            t_extract = fut_e.result()
-            state_counts, t_state = fut_s.result()
+            # Catalyst analysis); eager Spark work inside the window is
+            # accounted separately (gen.eager) so the attribution in
+            # BENCH/CRAWL_OVERHEAD.md measures what it names. The
+            # extract write runs UNDER the tail of this window, so
+            # `plan` and `writes_wall` overlap by (now - t_submit0);
+            # `writes_wall` is measured from the FIRST submit to keep
+            # it the true wall of the write phase.
+            gen.times["plan"] = time.time() - gen.t0 - gen.eager_s
+            gen.times["eager"] = gen.eager_s
+            fut_s = pool.submit(_timed, self._write_state, state, g)
+            fut_v = None
+            if val_delta is not None:
+                fut_v = pool.submit(_timed, self._validators.append, val_delta)
+            gen.times["extract"] = fut_e.result()[1]
+            counts, gen.times["state"] = fut_s.result()
             if fut_v is not None:
-                # recorded by THIS generation's manifest below (see
-                # DeltaStore)
-                t_validators, self._validators.committed = fut_v.result()
+                # recorded by THIS generation's manifest (see DeltaStore)
+                self._validators.committed, gen.times["validators"] = (
+                    fut_v.result()
+                )
         finally:
             pool.shutdown(wait=True)
-        t_writes_end = time.time()
-        t_writes = t_writes_end - t_submit0
-        self._refresh_seen_blobs(g)
+        gen.times["writes_wall"] = time.time() - t_submit0
+        return extracted, counts
 
-        # media download stage (CrawlConfig.media_dir): consumes the
-        # still-cached extraction; counts ride the manifest. Runs
-        # after the frontier/extracted sinks (their write bandwidth
-        # first) and BEFORE the manifest commit so media_seen_max
-        # rides the same atomic commit.
-        media_stats = None
+    def _terminal_rows(self, terminal: list, gen: _Generation) -> DataFrame:
+        """This generation's terminal delta: the (frame, status) pairs
+        of ``_classify_misses`` through one builder, then the revisit
+        sweep's ready-made 'disallowed' rows."""
+        parts = []
+        for df, status in terminal:
+            if df is not None:
+                pre, post = self._plan["terminal"][status]
+                parts.append(
+                    df.select(*pre, F.lit(gen.g).alias("generation"), *post)
+                )
+        return _union(parts + gen.terminal)
+
+    def _validators_delta(self, dispatch: DataFrame, gen: _Generation):
+        """Revisit mode: this generation's validators delta (None when
+        nothing was stamped) — the response validators of every
+        200/304 (depth/path from the dispatch row) plus the restamps
+        of the sweep and of failed revisits, which arrive complete.
+
+        AIMD interval update (CrawlConfig.revisit_min_s/max_s): a first
+        fetch starts at the base TTL, a 304 doubles the previous
+        interval (capped), changed content halves it (floored) — the
+        previous interval clamped into the CURRENT bounds first, so
+        reconfigured min/max take effect immediately."""
+        if not gen.validators:
+            return None
+        now = time.time()
+        prev = F.col("prev_interval")
+        prev_c, base, mn, mx = self._revisit_clamp("prev_interval")
+        interval = (
+            F.when(prev.isNull(), base)
+            .when(F.col("unchanged"), F.least(prev_c * 2, mx))
+            .otherwise(F.greatest(prev_c / 2, mn))
+        )
+        prev_ints = F.broadcast(
+            gen.stored.select(
+                "url", F.col("interval_s").alias("prev_interval")
+            ) if gen.stored is not None else dispatch.select(
+                "url", F.lit(None).cast("double").alias("prev_interval")
+            )
+        )
+        rows = F.broadcast(dispatch.select("url", "depth", "path"))
+        return _union([
+            v if "fetched_at" in v.columns else (
+                v.join(rows, "url", "inner")
+                .join(prev_ints, "url", "left")
+                .select(
+                    "url", "host", "depth", "path", "etag", "last_modified",
+                    F.lit(now).alias("fetched_at"),
+                    interval.alias("interval_s"),
+                )
+            )
+            for v in gen.validators
+        ])
+
+    def _post(self, extracted: DataFrame, gen: _Generation) -> dict:
+        """Phase 6, after the writes and while the generation's caches
+        are still live: record the seen blobs the probe wrote, run the
+        media download stage and count the dropped leaf redirects.
+        Returns the manifest extras."""
+        self._refresh_seen_blobs(gen.g)
+        extra: dict = {}
         if self.cfg.media_dir:
+            # consumes the still-cached extraction; after the
+            # frontier/extracted sinks (their write bandwidth first)
+            # and BEFORE the manifest commit so media_seen_max rides
+            # the same atomic commit
             t_m = time.time()
-            media_stats = self._fetch_media(extracted, g)
-            media_stats["media_wall_s"] = round(time.time() - t_m, 3)
-
-        # per-host metrics are NOT a third write job anymore: the
-        # extracted delta carries the per-page counters and the frontier
-        # delta carries the fetch_failed rows — ``metrics_df`` aggregates
-        # them on read (S8 lineage preserved, one fewer job per
-        # generation; round-2 verdict item 7)
+            extra.update(self._fetch_media(extracted, gen))
+            extra["media_wall_s"] = round(time.time() - t_m, 3)
         # strict mode drops second-level cross-host redirect targets by
-        # design (leaf fetches, CrawlConfig) — count them BEFORE the
-        # backing caches unpersist so the drop is observable in the
-        # manifest rather than silent (round-6 verdict item 5)
-        dropped2 = 0
-        for df in self._step_redirects2:
-            dropped2 += df.count()
-        results.unpersist()
-        if first_level is not None:
-            first_level.unpersist()
-        if fetched_cache is not None:
-            fetched_cache.unpersist()
-        for c in self._strict_caches:
-            c.unpersist()
-        self._step_redirects, self._strict_caches = [], []
-        self._step_redirects2 = []
-        self._step_unchanged, self._step_validators = [], []
-        self._step_val_newest = None
-        self._step_prev_intervals = None
-        self._step_cond_batch = None
-        marked.unpersist()
-        # per-phase wall times ride in the manifest (S8 lineage + the
-        # feedback loop for tuning per-generation overhead)
-        self.last_step_times = {
-            "plan": round(t_plan, 3),
-            "eager": round(self._t_eager, 3),
-            "extract": round(t_extract, 3),
-            "state": round(t_state, 3),
-            "writes_wall": round(t_writes, 3),
-            "post": round(time.time() - t_writes_end, 3),
-        }
-        if val_delta is not None:
-            self.last_step_times["validators"] = round(t_validators, 3)
-        extra = {"step_times": self.last_step_times}
-        if dropped2:
-            extra["second_level_redirects_dropped"] = dropped2
-        if media_stats is not None:
-            extra.update(media_stats)
-        stats = self._commit_generation(g, extra, counts=state_counts)
-        self.generation = g
-        for st in self._gated_stores:  # after the commit (see DeltaStore)
-            st.maybe_compact()
-        return stats
+        # design (leaf fetches, CrawlConfig) — counted off the live
+        # fetch caches so the drop is observable in the manifest
+        # rather than silent (round-6 verdict item 5)
+        dropped = sum(df.count() for df in gen.leaf_redirects)
+        if dropped:
+            extra["second_level_redirects_dropped"] = dropped
+        return extra
 
-    def _commit_generation(self, g: int, extra: dict, counts=None) -> dict:
-        """Fold this generation's terminal delta into the cumulative
-        status totals (from the state write's observation, or parquet
-        footers on the fallback path), commit the manifest atomically,
-        THEN publish the totals. A retried generation recomputes from
-        the last committed totals."""
-        counts = dict(counts) if counts is not None else self._state_counts(g)
+    def _commit_generation(self, g: int, extra: dict, counts: dict) -> dict:
+        """Fold this generation's status counts (the state write's
+        observation) into the cumulative totals, commit the manifest
+        atomically, THEN publish the totals. A retried generation
+        recomputes from the last committed totals."""
+        counts = dict(counts)
         pending = counts.pop("pending", 0)
         totals = dict(self.status_totals)
         for status, n in counts.items():
@@ -1893,24 +1839,6 @@ class Crawler:
         self._commit_manifest(g, {"frontier_status": stats, **extra})
         self.status_totals = totals
         return stats
-
-    def _state_counts(self, g: int) -> dict:
-        """Per-status row counts of one generation's state dir (pending
-        snapshot + terminal delta), straight from parquet footers —
-        via fsio so the checkpoint can live on any pyarrow.fs scheme."""
-        base = self._p("frontier", f"g{g}")
-        out: dict = {}
-        for entry in fsio.listdir(base):
-            if not entry.startswith("status="):
-                continue
-            status = entry[len("status="):]
-            n = 0
-            d = fsio.join(base, entry)
-            for fn in fsio.listdir(d):
-                if fn.endswith(".parquet"):
-                    n += fsio.parquet_num_rows(fsio.join(d, fn))
-            out[status] = n
-        return out
 
     # ---------------------------------------------------------------- run
     def run(self, seeds=None, max_generations=None) -> dict:
@@ -2003,13 +1931,16 @@ class Crawler:
         from pyspark.sql import Window
 
         seen_path = self._p("seen_exact")
-        try:
-            seen = self.spark.read.parquet(seen_path).distinct()
+        new = probe
+        if fsio.isdir(seen_path):  # absent until the first append
+            # read errors propagate: treating an unreadable seen table
+            # as empty would re-crawl the whole frontier
+            seen = self.spark.read.schema("seen_url string").parquet(
+                seen_path
+            ).distinct()
             new = probe.join(
                 seen, probe["url_canon"] == seen["seen_url"], "left_anti"
             )
-        except Exception:
-            new = probe
         new_list = [r["url_canon"] for r in new.select("url_canon").distinct().collect()]
         # hard cap: exact mode is the TEST-SCALE oracle backstop; a real
         # crawl must run seen_mode='cuckoo' (no driver-side collect)
@@ -2176,26 +2107,11 @@ class Crawler:
             # one job (AnalysisException at best, loss of the merged
             # terminal history at worst). Idempotent no-op instead.
             return self._p("compacted", f"g{floor - 1}")
-        parts = []
-        if floor > 0:
-            parts.append(
-                self.spark.read.schema(FRONTIER_DDL).parquet(
-                    self._p("compacted", f"g{floor - 1}")
-                ).select(*_frontier_cols())
-            )
-        for i in range(floor, g + 1):
-            p = self._p("frontier", f"g{i}")
-            if fsio.isdir(p):
-                parts.append(
-                    self.spark.read.schema(FRONTIER_DDL).parquet(p)
-                    .filter(F.col("status") != "pending")
-                    .select(*_frontier_cols())
-                )
-        if not parts:
+        df = _union(
+            _terminal_history(self.spark, self.cfg.checkpoint_dir, g)
+        )
+        if df is None:
             return ""
-        df = parts[0]
-        for x in parts[1:]:
-            df = df.unionByName(x)
         out = self._p("compacted", f"g{g}")
         df.write.mode("overwrite").partitionBy("status").parquet(out)
         # explicit commit marker (also written by Spark's job committer;
@@ -2235,6 +2151,22 @@ class Crawler:
                 ):
                     fsio.rmtree(fsio.join(seen_base, entry))
         return out
+
+
+def _union(frames: list):
+    """unionByName fold over the non-None ``frames`` (None when none
+    remain)."""
+    frames = [f for f in frames if f is not None]
+    if not frames:
+        return None
+    return functools.reduce(lambda a, b: a.unionByName(b), frames)
+
+
+def _timed(fn, *args):
+    """(fn(*args), wall seconds) — the shape of every write future."""
+    t = time.time()
+    out = fn(*args)
+    return out, time.time() - t
 
 
 def _frontier_cols():

@@ -13,7 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from img_spark.operators.fetch import fetch_pages_http
-from img_spark.plans.crawl import CrawlConfig, Crawler, read_frontier
+from img_spark.plans.crawl import (
+    CrawlConfig, Crawler, _Generation, read_frontier,
+)
 from img_spark.operators.politeness import robots_df
 from img_spark.sources.site_config import rows_from_config
 from img_spark.sources.synthweb import (
@@ -351,7 +353,7 @@ def test_second_level_live_fetch_honors_robots_delay(
         [(f"https://site-a.test/a1/{p}",) for p in (1, 2, 3)],
         "url string",
     )
-    out = c._fetch_http(batch).collect()
+    out = c._fetch_http(batch, _Generation(0)).collect()
     assert len(out) == 3
     times = sorted(t for h, p, t in log if p.startswith("/a1/"))
     gaps = [b - a for a, b in zip(times, times[1:])]

@@ -79,6 +79,31 @@ def test_cuckoo_membership(hashes):
         assert f.contains_hash(h)
 
 
+def test_cuckoo_hash_inputs_convert_without_warning():
+    """probe_and_insert takes the crawl's int64 hashes, uint64 arrays
+    and Python ints anywhere in [-2^63, 2^64) as the same 64 bits —
+    same flags, and no NumPy out-of-bound conversion warning (a future
+    NumPy raises on negative ints converted to uint64)."""
+    import warnings
+
+    import numpy as np
+
+    signed = [-1, -(2**63), 5, 2**63 - 1, -1]
+    unsigned = [h & (2**64 - 1) for h in signed]
+    mixed = [-1, 2**63, 5, 2**63 - 1, 2**64 - 1]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        flags = [
+            CuckooFilter(capacity=64).probe_and_insert(hs).tolist()
+            for hs in (
+                np.array(signed, dtype=np.int64),
+                np.array(unsigned, dtype=np.uint64),
+                signed, unsigned, mixed,
+            )
+        ]
+    assert flags == [[True, True, True, True, False]] * 5
+
+
 @given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300),
        st.integers(min_value=1, max_value=32))
 @settings(max_examples=50, deadline=None)
