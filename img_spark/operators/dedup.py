@@ -9,8 +9,8 @@ Scale shapes:
 - MinHash+LSH: signatures are pure column expressions over the distinct
   gram-hash array (shingle → minhash → band → bucket-join); only bucket
   collisions shuffle.
-- SimHash: 32-bit signature in one expression; near-dups via banded
-  chunk equality (hamming ≤ 32-bits/band_count guarantee).
+- SimHash: 64-bit signature as one explode + map-side-combinable sums;
+  near-dups via banded chunk equality (hamming < band_count guarantee).
 - embedding cosine: see similarity.py.
 
 Hashes are md5-derived (h32) so DuckDB oracles can reproduce signatures
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 from .textquality import fingerprint, h32, tokens
 
@@ -448,148 +448,85 @@ def connected_components(
     b_col: str = "doc_b",
     max_iters: int = 50,
 ) -> DataFrame:
-    """Collapse near-dup PAIRS into clusters: iterative min-label
-    propagation (the standard large-graph connected-components shape —
-    each iteration is one shuffle join of edge-sized data + a map-side
-    combinable min; iterations ≤ graph diameter, convergence checked
-    with a cheap aggregate). Returns (doc_id, rep_id) for every node
-    that appears in a pair; rep_id = the component's minimum doc id —
-    the keep-the-smallest-id dedup policy."""
+    """Collapse near-dup PAIRS into clusters with the large-star /
+    small-star contraction (Kiveris et al., SoCC 2014): O(log n) rounds
+    over the edge list only, each phase one groupBy with no join, and
+    the lineage cut with ``localCheckpoint`` after every phase.
+
+    - large-star: every node links its larger neighbours to the
+      smallest of itself and its neighbours;
+    - small-star: every node links itself and its smaller neighbours
+      to the smallest of them.
+
+    Convergence rides the large-star aggregate as an Observation (no
+    extra job): when no node is neither a star centre (no smaller
+    neighbour) nor a leaf (one neighbour), the edges are a star forest
+    centred on each component's minimum. Raises ``RuntimeError`` when
+    ``max_iters`` rounds do not converge.
+
+    Returns (doc_id, rep_id) for every node that appears in a pair
+    (a node seen only in a self-pair gets its own row); rep_id = the
+    component's minimum id — the keep-the-smallest-id dedup policy.
+    The result reads a checkpoint (nothing to unpersist); its
+    ``rounds`` attribute is the number of large-star rounds run."""
+    a, b = F.col(a_col), F.col(b_col)
+    # canonical (lo ≤ hi) edges, read from ``pairs`` once; a self-pair
+    # stays as (n, n) so its node keeps a row
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        pairs.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
+        .filter(F.col("lo").isNotNull())
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "rep_id", F.col("doc_id")
-    ).persist()
-    for _ in range(max_iters):
-        # each node takes the min of its own label and its neighbours'
-        prop = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"),
-                    F.col("rep_id").alias("nbr_rep"),
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("nbr_rep").alias("nbr_min"))
+    n, nbrs = F.col("n"), F.col("nbrs")
+    rep = F.least(n, F.array_min(nbrs))
+    for rounds in range(1, max_iters + 1):
+        obs = Observation()
+        nodes = (
+            edges.select(F.explode(F.array(
+                F.struct(F.col("lo").alias("n"), F.col("hi").alias("v")),
+                F.struct(F.col("hi").alias("n"), F.col("lo").alias("v")),
+            )).alias("e"))
+            .groupBy(F.col("e.n").alias("n"))
+            .agg(F.array_remove(F.collect_set("e.v"), n).alias("nbrs"))
+            .observe(obs, F.count(F.when(
+                (F.array_min(nbrs) < n) & (F.size(nbrs) > 1), 1
+            )).alias("open"))
+            .localCheckpoint(eager=True)
         )
-        new_labels = (
-            labels.join(prop, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("rep_id"), F.coalesce(F.col("nbr_min"), F.col("rep_id"))
-                ).alias("rep_id"),
-            )
-            .persist()
+        if obs.get["open"] == 0:
+            out = nodes.select(n.alias("doc_id"), rep.alias("rep_id"))
+            out.rounds = rounds
+            return out
+        # large-star edges (rep, v) for each larger neighbour v; an
+        # isolated node keeps its (n, n) row
+        large = nodes.select(rep.alias("lo"), F.explode(
+            F.when(F.size(nbrs) == 0, F.array(n))
+            .otherwise(F.filter(nbrs, lambda v: v > n))
+        ).alias("hi"))
+        # small-star: group by the larger end; link it and its smaller
+        # neighbours to their minimum
+        members = (
+            large.groupBy("hi")
+            .agg(F.array_union(F.collect_set("lo"), F.array(F.col("hi")))
+                 .alias("ms"))
+            .select(F.array_min("ms").alias("lo"), "ms")
         )
-        # convergence: no node's label changed this iteration. The
-        # changed-row count works for ANY orderable id type (numeric
-        # doc ids AND string URLs — the old sum-witness cast strings
-        # to double and threw). Deliberately a FULL count, no
-        # limit(1): the full scan materializes every partition of
-        # new_labels' cache in this same job, so unpersisting the
-        # parent below never forces a recompute through unpersisted
-        # ancestors (a limited probe can stop early and leave the
-        # cache partial)
-        changed = (
-            new_labels.withColumnRenamed("rep_id", "new_rep")
-            .join(labels, "doc_id")
-            .filter(F.col("new_rep") != F.col("rep_id"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    # returned persisted (each iteration was materialized by the
-    # convergence aggregate, so lineage never re-runs); caller may
-    # unpersist when done
-    return labels
+        edges = members.select("lo", F.explode(
+            F.when(F.size("ms") == 1, F.col("ms"))
+            .otherwise(F.filter("ms", lambda v: v != F.col("lo")))
+        ).alias("hi")).localCheckpoint(eager=True)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iters} rounds"
+    )
 
 
 # ---------------------------------------------------------------- simhash
 # Salt for the high 32-bit word of the 64-bit signature: word 0 hashes
-# the token itself (backward-compatible with the 32-bit form), word 1
-# hashes token||'#2' — an independent 32-bit hash family, shared
-# verbatim with the DuckDB oracles.
+# the token itself (the legacy 32-bit signature), word 1 hashes
+# token||'#2' — an independent 32-bit hash family, shared verbatim with
+# the DuckDB oracles.
 _SIMHASH_HI_SALT = "#2"
-
-
-def simhash32(text: Column, salt: str = "") -> Column:
-    """32-bit SimHash over word h32 hashes, as one expression: per-bit
-    weight = Σ(bit? +1 : -1); signature bit j set iff weight > 0.
-    ``salt`` is appended to each token before hashing (used to derive
-    the independent high word of the 64-bit signature)."""
-    toks = F.array_distinct(tokens(text))
-    if salt:
-        hs = F.transform(toks, lambda t: h32(F.concat(t, F.lit(salt))))
-    else:
-        hs = F.transform(toks, h32)
-    # bit positions unrolled as literals (shiftright needs an int shift)
-    acc = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0).cast("long"), 32),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("long")
-                for j in range(32)
-            ]),
-            lambda x, y: x + y,
-        ),
-    )
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(32)])
-    return F.aggregate(
-        F.zip_with(
-            acc,
-            powers,
-            lambda w, p: F.when(w > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-
-
-def simhash32_agg(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Aggregate formulation of simhash32 (identical values): per-bit
-    weight = 2·(count of set bits) − n_tokens, so one explode of the
-    distinct token hashes + 32 map-side-combinable ``sum()`` aggregates
-    replaces the per-row 32-array fold. Returns (doc_id, sh).
-
-    NULL-text docs emit no row and are excluded from near-dup bands —
-    intended (the expression form emits sh=NULL for them, and NULL join
-    keys never band-match, so the resulting PAIR set is identical);
-    empty-string docs keep their real signature in both forms."""
-    h = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.transform(F.array_distinct(tokens(F.col(text_col))), h32)
-        ).alias("h"),
-    )
-    aggs = [
-        F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(f"c{j}")
-        for j in range(32)
-    ] + [F.count("*").alias("n")]
-    agged = h.groupBy("doc_id").agg(*aggs)
-    sh = None
-    for j in range(32):
-        term = F.when(
-            F.col(f"c{j}") * 2 > F.col("n"), F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sh = term if sh is None else sh + term
-    return agged.select("doc_id", sh.alias("sh"))
 
 
 def simhash64_agg(
@@ -598,10 +535,11 @@ def simhash64_agg(
     """64-bit SimHash as TWO 32-bit words (doc_id, sh_lo, sh_hi) — two
     longs instead of one 64-bit value so the sign bit never enters the
     sum-of-powers arithmetic and the DuckDB oracle stays exact. Word 0
-    uses h32(token) (≡ ``simhash32_agg``), word 1 the independent
-    family h32(token||'#2'). Same shape as the 32-bit aggregate: one
-    explode of the distinct token hashes, 64 map-side-combinable sums.
-    NULL-text docs emit no row (pinned; see ``simhash32_agg``)."""
+    uses h32(token) (the legacy 32-bit signature), word 1 the
+    independent family h32(token||'#2'). Per-bit weight = 2·(count of
+    set bits) − n_tokens: one explode of the distinct token hashes, 64
+    map-side-combinable sums. NULL-text docs emit no row and so never
+    band-match; empty-string docs keep their real signature."""
     h = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(

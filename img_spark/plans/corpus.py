@@ -449,8 +449,7 @@ def build_corpus(
     docs.unpersist()
     if banded is not None:
         banded.unpersist()
-    if comps is not None:
-        comps.unpersist()  # connected_components returns it persisted
+    # comps reads a local checkpoint, not a cache: nothing to unpersist
     return {k: int(v) for k, v in obs.get.items()}
 
 
@@ -1033,7 +1032,6 @@ def build_corpus_incremental(
         comps_all.select("doc_id", "rep_id").write.mode("overwrite").parquet(
             fsio.join(stt, "comps")
         )
-        comps_all.unpersist()
         bnew.unpersist()
     fsio.write_bytes_atomic(
         fsio.join(stt, "meta.json"),

@@ -2405,8 +2405,9 @@ SELECT host, path_prefix, allow, crawl_delay FROM (
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: connected components over the MinHash+verify
     pairs (threshold 0.8), rep = min doc id per component — the
-    keep-smallest dedup policy. Iterative min-label propagation on the
-    Spark side; the oracle replays it with a recursive CTE."""
+    keep-smallest dedup policy. Large-star/small-star contraction on the
+    Spark side (O(log n) join-free rounds); the oracle replays plain
+    min-label propagation with a recursive CTE."""
     pairs = dedup.minhash_dedup(_docs(spark, sf_dir), threshold=0.8)
     return dedup.connected_components(pairs)
 

@@ -3,9 +3,11 @@ over the driver-provided sf0.001 documents/embeddings tables."""
 
 import hashlib
 import math
+import random
 
 import pytest
-from pyspark.sql import functions as F
+from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import Column, DataFrame, functions as F
 
 from img_spark.operators import dedup, similarity
 from img_spark.operators.multimodal import (
@@ -21,6 +23,7 @@ from img_spark.operators.textquality import (
     lang_id,
     quality_signals,
     token_count,
+    tokens,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -45,6 +48,81 @@ def py_grams(text: str, n=3):
     if len(toks) < n:
         return {py_h32(" ".join(toks))}
     return {py_h32(" ".join(toks[i:i + n])) for i in range(len(toks) - n + 1)}
+
+
+# ------------------------------------------- legacy 32-bit SimHash
+# The 32-bit forms the engine's 64-bit ``dedup.simhash64_agg`` replaced,
+# kept as the parity reference: word 0 of the 64-bit signature must
+# equal them bit for bit.
+
+
+def simhash32(text: Column, salt: str = "") -> Column:
+    """32-bit SimHash over word h32 hashes, as one expression: per-bit
+    weight = Σ(bit? +1 : -1); signature bit j set iff weight > 0.
+    ``salt`` is appended to each token before hashing (used to derive
+    the independent high word of the 64-bit signature)."""
+    toks = F.array_distinct(tokens(text))
+    if salt:
+        hs = F.transform(toks, lambda t: h32(F.concat(t, F.lit(salt))))
+    else:
+        hs = F.transform(toks, h32)
+    # bit positions unrolled as literals (shiftright needs an int shift)
+    acc = F.aggregate(
+        hs,
+        F.array_repeat(F.lit(0).cast("long"), 32),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(*[
+                F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
+                .otherwise(F.lit(-1))
+                .cast("long")
+                for j in range(32)
+            ]),
+            lambda x, y: x + y,
+        ),
+    )
+    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(32)])
+    return F.aggregate(
+        F.zip_with(
+            acc,
+            powers,
+            lambda w, p: F.when(w > 0, p).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda s, x: s + x,
+    )
+
+
+def simhash32_agg(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Aggregate formulation of simhash32 (identical values): per-bit
+    weight = 2·(count of set bits) − n_tokens, so one explode of the
+    distinct token hashes + 32 map-side-combinable ``sum()`` aggregates
+    replaces the per-row 32-array fold. Returns (doc_id, sh).
+
+    NULL-text docs emit no row and are excluded from near-dup bands —
+    intended (the expression form emits sh=NULL for them, and NULL join
+    keys never band-match, so the resulting PAIR set is identical);
+    empty-string docs keep their real signature in both forms."""
+    h = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(
+            F.transform(F.array_distinct(tokens(F.col(text_col))), h32)
+        ).alias("h"),
+    )
+    aggs = [
+        F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(f"c{j}")
+        for j in range(32)
+    ] + [F.count("*").alias("n")]
+    agged = h.groupBy("doc_id").agg(*aggs)
+    sh = None
+    for j in range(32):
+        term = F.when(
+            F.col(f"c{j}") * 2 > F.col("n"), F.lit(1 << j).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+        sh = term if sh is None else sh + term
+    return agged.select("doc_id", sh.alias("sh"))
 
 
 def test_h32_portable(spark):
@@ -145,7 +223,7 @@ def test_simhash_python_parity(docs, local_docs):
     got = {
         r["doc_id"]: r["sh"]
         for r in docs.select(
-            "doc_id", dedup.simhash32(F.col("text")).alias("sh")
+            "doc_id", simhash32(F.col("text")).alias("sh")
         ).collect()
     }
     for did, text in local_docs[:50]:
@@ -158,8 +236,8 @@ def test_simhash64_agg_matches_expression_form(docs):
     must equal the legacy 32-bit signature (word-0 compatibility)."""
     expr = docs.select(
         "doc_id",
-        dedup.simhash32(F.col("text")).alias("e_lo"),
-        dedup.simhash32(F.col("text"), salt="#2").alias("e_hi"),
+        simhash32(F.col("text")).alias("e_lo"),
+        simhash32(F.col("text"), salt="#2").alias("e_hi"),
     )
     agg = dedup.simhash64_agg(docs)
     j = expr.join(agg, "doc_id")
@@ -167,7 +245,7 @@ def test_simhash64_agg_matches_expression_form(docs):
         (F.col("e_lo") != F.col("sh_lo")) | (F.col("e_hi") != F.col("sh_hi"))
     ).count()
     assert bad == 0
-    legacy = dedup.simhash32_agg(docs)
+    legacy = simhash32_agg(docs)
     assert j.join(legacy, "doc_id").filter(
         F.col("sh") != F.col("sh_lo")
     ).count() == 0
@@ -464,7 +542,7 @@ def test_ivf_topk_structure_and_overlap(spark):
 
 def test_connected_components_known_graph(spark):
     """Chain 1-2-3-4, triangle 10-11-12 (via pairs), isolated pair
-    20-21: min-label propagation converges to the component minimum."""
+    20-21: the star contraction converges to the component minimum."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         "doc_a long, doc_b long",
@@ -473,6 +551,86 @@ def test_connected_components_known_graph(spark):
            for r in dedup.connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def py_components(pairs):
+    """Pure-Python union-find: node -> its component's minimum."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _components(spark, pairs, schema="doc_a long, doc_b long", **kw):
+    out = dedup.connected_components(spark.createDataFrame(pairs, schema), **kw)
+    return {r["doc_id"]: r["rep_id"] for r in out.collect()}
+
+
+def test_connected_components_matches_union_find_on_path(spark):
+    """A 1,000-node path over shuffled ids: the chain shape min-label
+    propagation needed ~n rounds for."""
+    ids = list(range(1000))
+    random.Random(7).shuffle(ids)
+    pairs = list(zip(ids, ids[1:]))
+    got = _components(spark, pairs)
+    assert got == py_components(pairs)
+
+
+_CC_IDS = {
+    "long": st.integers(0, 24),
+    "string": st.sampled_from([f"d{i:02d}" for i in range(25)]),
+}
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(st.sampled_from(sorted(_CC_IDS)).flatmap(lambda t: st.tuples(
+    st.just(t), st.lists(st.tuples(_CC_IDS[t], _CC_IDS[t]),
+                         min_size=1, max_size=30))))
+def test_connected_components_matches_union_find_hypothesis(spark, case):
+    """Int and string ids, with duplicate, reversed and self pairs; a
+    node seen only in a self-pair keeps its (id, id) row (the
+    incremental bridge feeds stored (rep, rep) rows back in)."""
+    kind, base = case
+    solo = 99 if kind == "long" else "solo"
+    pairs = (base + [(b, a) for a, b in base[::2]] + base[:2]
+             + [(solo, solo)])
+    got = _components(spark, pairs, f"doc_a {kind}, doc_b {kind}")
+    assert got == py_components(pairs)
+    assert got[solo] == solo
+
+
+def test_connected_components_log_rounds_no_join(spark, monkeypatch):
+    """A 4,000-node reversed path converges in <= 2*ceil(log2 n) rounds
+    (counted by the function, not timed), and no round joins."""
+    n = 4000
+    pairs = [(i + 1, i) for i in reversed(range(n - 1))]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+    def no_join(*a, **kw):
+        raise AssertionError("connected_components must not join")
+
+    monkeypatch.setattr(type(df), "join", no_join)
+    out = dedup.connected_components(df)
+    assert out.rounds <= 2 * math.ceil(math.log2(n))
+    assert {r["doc_id"]: r["rep_id"] for r in out.collect()} == {
+        i: 0 for i in range(n)}
+
+
+def test_connected_components_raises_when_out_of_rounds(spark):
+    pairs = [(i, i + 1) for i in range(100)]
+    with pytest.raises(RuntimeError, match="2 rounds"):
+        _components(spark, pairs, max_iters=2)
 
 
 def test_ivf_assignment_no_window_over_product(spark):
@@ -563,7 +721,7 @@ def test_null_text_docs_excluded_from_lsh_by_design(spark):
             for r in dedup.minhash_lsh_candidates(docs_df).collect()}
     assert (2, 3) in cand
     assert all(a not in (0, 1) and b not in (0, 1) for a, b in cand)
-    sh = {r["doc_id"] for r in dedup.simhash32_agg(docs_df).collect()}
+    sh = {r["doc_id"] for r in simhash32_agg(docs_df).collect()}
     assert sh == {2, 3, 4}
     near = dedup.simhash_near_dups(docs_df).collect()
     assert all(r["doc_a"] not in (0, 1) and r["doc_b"] not in (0, 1)

@@ -2,7 +2,9 @@
 (port of the reference's img::sanity_check_json, main.rs:1186-1240)."""
 
 import json
+import os
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from img_spark.functions.textops import (
@@ -12,6 +14,9 @@ from img_spark.functions.textops import (
     url_redirect_and_query_cleanup,
 )
 from img_spark.operators.seen import CuckooFilter
+
+# the reference crate's site config; not shipped with this repository
+WEB_JSON = "/root/reference/src/web.json"
 
 URL_CHARS = st.text(
     alphabet="abcdefghijklmnopqrstuvwxyz0123456789./-_?&=%:#", max_size=60
@@ -128,6 +133,8 @@ def test_cuckoo_serialization_roundtrip():
     assert g.count == f.count
 
 
+@pytest.mark.skipif(not os.path.exists(WEB_JSON),
+                    reason="reference web.json not present")
 def test_webjson_sanity():
     """Port of img::sanity_check_json (main.rs:1186-1240): the reference
     config must parse, and our loader must explode every domain; report
@@ -135,8 +142,8 @@ def test_webjson_sanity():
     reference — asserted as structural sanity here)."""
     from img_spark.sources.site_config import load_site_config_rows
 
-    rows = load_site_config_rows("/root/reference/src/web.json")
-    cfg = json.load(open("/root/reference/src/web.json"))
+    rows = load_site_config_rows(WEB_JSON)
+    cfg = json.load(open(WEB_JSON))
     n_domains = sum(
         len([d for d in e["Site"].split(",") if d.strip()])
         for e in cfg
