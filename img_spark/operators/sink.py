@@ -4,35 +4,33 @@ The reference's sink is `curl -Z` into per-album directories; the engine
 materializes the same decisions as a ``downloads`` table: download dir
 (album title, ``/``→``:``, F12), derived filename (F10), percent-encoded
 fetch URL (F11), per-host referer (main.rs:641), and the
-extension-detection flag (S6). Everything except the percent-encode is a
-pure column expression; the encode runs as an Arrow pandas_udf because
-the reference's NON_ALPHANUMERIC-minus-safe-set has no JVM builtin
-equivalent (java.net.URLEncoder differs on '+'/'~').
+extension-detection flag (S6). Every column is a pure JVM expression,
+the percent-encode included: ``url_encode`` (java.net.URLEncoder) plus a
+fixed replace chain reproduces the reference's NON_ALPHANUMERIC set, so
+no column of the table runs Python.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
-from img_spark.functions.textops import content_type_to_name, percent_encode
 from img_spark.operators.urlexprs import filename_expr
 
 
-@pandas_udf("string")
-def percent_encode_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: percent_encode(u) if u is not None else None)
-
-
-@pandas_udf("string")
-def content_type_name_udf(names: pd.Series, ctypes: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            content_type_to_name(n, c) if n is not None and c is not None else None
-            for n, c in zip(names, ctypes)
-        ]
-    )
+def percent_encode_expr(u: F.Column) -> F.Column:
+    """F11 (main.rs:553-564, 629) as a JVM expression, the Column twin
+    of ``textops.percent_encode``; NULL stays NULL. URLEncoder keeps
+    alnum and ``.-*_``, writes ' ' as '+' and every other UTF-8 byte as
+    upper-case %XX; F11 also keeps ``:/?=%`` and encodes '*' and ' '.
+    A '%' only ever starts a triplet, so no replace matches across two,
+    and '%25' -> '%' runs last so a decoded '%' starts no new match."""
+    out = F.url_encode(u)
+    for search, repl in (("%3A", ":"), ("%2F", "/"), ("%3F", "?"),
+                         ("%3D", "="), ("*", "%2A"), ("+", "%20"),
+                         ("%25", "%")):
+        out = F.replace(out, F.lit(search), F.lit(repl))
+    return out
 
 
 def download_columns() -> dict:
@@ -54,7 +52,7 @@ def download_columns() -> dict:
         "filename": F.when(dl, fname),
         "needs_ext_detection": dl & fname.isNull(),
         "referer": F.when(dl, F.concat(F.lit("https://"), F.col("host"))),
-        "enc_url": F.when(dl, percent_encode_udf(u)),
+        "enc_url": F.when(dl, percent_encode_expr(u)),
     }
 
 

@@ -1980,14 +1980,14 @@ def q_percent_encode(spark, sf_dir):
     """F11 percent-encode (main.rs:553-564, 629): UTF-8 bytes outside
     alnum + ':/.-_?=%' encoded — the reference's NON_ALPHANUMERIC set,
     NOT urllib.quote (which never encodes '~' or '*')."""
-    from img_spark.operators.sink import percent_encode_udf
+    from img_spark.operators.sink import percent_encode_expr
 
     url = F.concat(
         F.lit("https://h.test/p "), _did(), F.lit("~a*b&c=d/e.f_g:h?i%j"),
         F.lit("é"),
     )
     return _docs(spark, sf_dir).select(
-        "doc_id", percent_encode_udf(url).alias("enc_url")
+        "doc_id", percent_encode_expr(url).alias("enc_url")
     )
 
 

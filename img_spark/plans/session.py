@@ -43,6 +43,18 @@ def engine_defaults(builder, shuffle_partitions: int | None = None):
         # Scale-neutral: a bounded driver/executor-JVM class cache —
         # a few MB — with identical semantics at any data size.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # PySpark 4's DataFrame debugging wraps every pyspark.sql.functions
+        # call and Column method: an active-session lookup, a conf read,
+        # a Python stack walk and a PySparkCurrentOrigin set/clear pair
+        # over py4j, all to put the Python call site into error messages
+        # (errors still raise with Spark's own text without it). Measured
+        # on a 4-vCPU VM, local[2]: one warm curate_corpus build went
+        # from ~10,500 py4j round trips to ~4,900 and its driver time
+        # before the first job from 1.85 s to 1.29 s; a crawl_table
+        # generation from 1,628 to 1,302 round trips. PySpark caches the
+        # value for the process on first read, so it must be set here,
+        # on the builder: a spark.conf.set after start-up has no effect.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # html blobs dominate bytes; keep Arrow batches modest so a batch of
         # pages fits comfortably in the Python worker (SURVEY.md §7.8).

@@ -252,9 +252,10 @@ def _page_batches(
                     rows, nbytes = [], 0
         except Exception:
             continue  # corrupt archive member: skip the file tail
-    yield pd.DataFrame(
-        rows, columns=["url", "warc_ts", "html", "text", "lang"]
-    )
+    if rows:  # an empty tail batch is all-object; yielding none is valid
+        yield pd.DataFrame(
+            rows, columns=["url", "warc_ts", "html", "text", "lang"]
+        )
 
 
 def read_warc_pages(
@@ -424,7 +425,8 @@ def _text_batches(
                     urls, texts, nbytes = [], [], 0
         except Exception:
             continue
-    yield pd.DataFrame({"url": urls, "text": texts})
+    if urls:
+        yield pd.DataFrame({"url": urls, "text": texts})
 
 
 def build_wet(records) -> bytes:

@@ -1357,3 +1357,30 @@ def test_warc_reader_dedups_revisits(spark, tmp_path):
     )
     rec = next(parse_warc(frac))
     assert rec["date"] == dt.datetime(2017, 3, 6, 4, 3, 53, 192000)
+
+
+def test_extracted_delta_write_runs_no_python_eval(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The extracted-delta frame a step writes (extraction output plus
+    the downloads-sink columns, percent-encode included) plans no
+    row-at-a-time or Arrow Python evaluation node: only the extraction
+    kernel's own mapInPandas crosses into Python."""
+    from img_spark.operators import sink
+
+    plans = []
+    real = sink.with_download_columns
+
+    def capture(*a, **kw):
+        out = real(*a, **kw)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(sink, "with_download_columns", capture)
+    c = make_crawler(spark, tmp_path_factory.mktemp("ckpt_no_pyeval"))
+    c.init(FIXTURE_SEEDS)
+    c.step()
+    assert len(plans) == 1
+    assert "enc_url" in plans[0]
+    assert "BatchEvalPython" not in plans[0]
+    assert "ArrowEvalPython" not in plans[0]

@@ -6,6 +6,7 @@ import os
 
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from img_spark.functions.textops import (
     canonicalize,
@@ -57,6 +58,30 @@ def test_percent_encode_charset(s):
         assert c.isalnum() or c in ":/.-_?=%"
     if "%" not in s:
         assert unquote(enc, errors="strict") == s
+
+
+# inputs whose encoding a replace chain over URLEncoder output could
+# get wrong: literal '+', '*', '%', escapes that spell a kept char
+_ENCODE_EDGES = ["", " ", "+", "*", "%", "%253A", "+%2B*", "%3A%2F",
+                 "a b+c", "~!'()", "é日😀", "%%25%2525"]
+
+
+@given(st.lists(st.one_of(st.none(), st.text(max_size=40)), max_size=30))
+@settings(max_examples=40, deadline=None)
+def test_percent_encode_expr_matches_python(spark, strings):
+    """The JVM percent-encode the downloads sink runs equals
+    ``textops.percent_encode`` on any text; NULL stays NULL."""
+    from img_spark.operators.sink import percent_encode_expr
+
+    rows = [(i, s) for i, s in enumerate(strings + _ENCODE_EDGES + [None])]
+    got = dict(
+        spark.createDataFrame(rows, "i int, s string")
+        .select("i", percent_encode_expr(F.col("s")).alias("e"))
+        .collect()
+    )
+    assert got == {
+        i: (None if s is None else percent_encode(s)) for i, s in rows
+    }
 
 
 @given(URL_CHARS)
@@ -353,10 +378,12 @@ def test_parse_sitemap_kernel():
     ) == ([], ["https://a/p"])
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_warc_reader_yields_bounded_batches():
     """The pages-batch generator must flush every flush_rows records
-    (peak task memory O(batch), not O(archive)) and the concatenation
-    must equal the unchunked parse."""
+    (peak task memory O(batch), not O(archive)), never yield an empty
+    batch (pandas deprecates concatenating all-object empty frames),
+    and the concatenation must equal the unchunked parse."""
     import datetime as dt
 
     import pandas as pd
@@ -371,14 +398,15 @@ def test_warc_reader_yields_bounded_batches():
     blob = build_warc(records)
     batches = list(_page_batches([blob], flush_rows=100))
     assert len(batches) >= 10  # many batches out of ONE archive
-    assert all(len(b) <= 100 for b in batches)
+    assert all(0 < len(b) <= 100 for b in batches)
     cat = pd.concat(batches, ignore_index=True)
     assert list(cat["url"]) == [u for u, _, _, _ in records]
     assert [bytes(h) for h in cat["html"]] == [h for _, _, h, _ in records]
 
     # byte-based flush: tiny byte budget → every batch is a single row
     bybytes = list(_page_batches([blob], flush_rows=10**9, flush_bytes=1))
-    assert len(bybytes) >= 1000
+    assert len(bybytes) == 1000
+    assert list(_page_batches([], flush_rows=100)) == []
 
 
 def test_wet_reader_yields_bounded_batches():
@@ -395,6 +423,7 @@ def test_wet_reader_yields_bounded_batches():
     blob = build_wet(records)
     batches = list(_text_batches([blob], flush_rows=50))
     assert len(batches) >= 6
+    assert all(len(b) > 0 for b in batches)
     cat = pd.concat(batches, ignore_index=True)
     assert list(cat["url"]) == [u for u, _, _ in records]
     assert list(cat["text"]) == [t for _, _, t in records]
