@@ -77,6 +77,21 @@ def gram_hashes(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(word_ngrams(text, n), h32))
 
 
+def doc_gram_sets(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """(doc_id, ghs): each document's distinct gram-hash set, the one
+    input of every MinHash stage — signatures, band table and the
+    exact-Jaccard verify. Shingling is the dominant per-document CPU of
+    the near-dup family, so a caller running several of those stages
+    persists this frame and passes it as ``grams=``: each document is
+    then shingled once per build instead of three times."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        gram_hashes(F.col(text_col), n).alias("ghs"),
+    )
+
+
 # ---------------------------------------------------------------- exact
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup on the normalized-text fingerprint: every doc gets its
@@ -193,10 +208,7 @@ def jaccard_pairs(
     (minhash_lsh_candidates / cap_buckets); the same trade-off is
     why simhash_near_dups keeps its bucket self-join.
     """
-    g = df.select(
-        F.col(id_col).alias("doc_id"),
-        gram_hashes(F.col(text_col), n).alias("ghs"),
-    ).select(
+    g = doc_gram_sets(df, id_col, text_col, n).select(
         "doc_id",
         # n_grams = the distinct-hash array size, carried through the
         # explode so pair rows arrive with na/nb attached — the former
@@ -242,53 +254,41 @@ def jaccard_pairs(
 
 
 # ---------------------------------------------------------------- minhash
-def minhash_signature_from(ghs: Column, k: int = MINHASH_K) -> Column:
-    """Array of k minhash values over a MATERIALIZED gram-hash array
-    column: sig_i = min over grams of (a_i*h + b_i) mod P. ``ghs`` must
-    be an attribute reference, NOT the gram-hashing expression itself —
-    inlining it would recompute the md5 shingling k times per row."""
-    return F.array(*[
-        F.array_min(
-            F.transform(ghs, lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P))
-        )
-        for a, b in PERMS[:k]
-    ])
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = MINHASH_K,
+    grams: DataFrame | None = None,
 ) -> DataFrame:
     """Aggregate formulation of the signature matrix: explode the
     distinct gram hashes ONCE, then one groupBy with k ``min()``
-    aggregates. Identical values to ``minhash_signature_from`` (min over
-    the same set), but the mins are map-side combinable — partial
-    aggregation happens before the shuffle, so only (doc_id, k longs)
-    rows cross the wire; the per-row array-expression form churns k
-    transient arrays per document instead. This is the shape that holds
-    at 10^10 docs.
+    aggregates: sig_i = min over grams of (a_i*h + b_i) mod P. The mins
+    are map-side combinable — partial aggregation happens before the
+    shuffle, so only (doc_id, k longs) rows cross the wire; a per-row
+    array-expression form would churn k transient arrays per document
+    instead. This is the shape that holds at 10^10 docs. ``grams``
+    supplies a precomputed ``doc_gram_sets`` frame; without it the
+    signatures shingle ``df`` themselves.
 
     NULL-text docs emit no row (explode of the empty hash set) — and
     are therefore EXCLUDED from LSH candidates. Intended: an unfetched
-    /binary doc is not a dedup candidate, and the expression form's
-    alternative (hashing NULL like "") would band-match every null doc
-    against every empty doc. Empty-STRING docs keep the h32("")
-    signature in both forms and still pair with each other (pinned by
-    tests/test_dataops.py)."""
-    g = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(gram_hashes(F.col(text_col))).alias("gh"),
+    /binary doc is not a dedup candidate, and hashing NULL like ""
+    would band-match every null doc against every empty doc.
+    Empty-STRING docs keep the h32("") signature and still pair with
+    each other (pinned by tests/test_dataops.py)."""
+    if grams is None:
+        grams = doc_gram_sets(df, id_col, text_col)
+    # one SQL string for all k aggregates: a Column tree per hash costs
+    # a py4j round trip per operator, ~1,000 per build for the
+    # signatures and bands alone
+    mins = ", ".join(
+        f"min((gh * {a} + {b}) % {MINHASH_P})" for a, b in PERMS[:k]
     )
-    aggs = [
-        F.min((F.col("gh") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(
-            f"s{i}"
-        )
-        for i, (a, b) in enumerate(PERMS[:k])
-    ]
-    return g.groupBy("doc_id").agg(*aggs).select(
-        "doc_id", F.array(*[F.col(f"s{i}") for i in range(k)]).alias("sig")
+    return (
+        grams.select("doc_id", F.explode("ghs").alias("gh"))
+        .groupBy("doc_id")
+        .agg(F.expr(f"array({mins})").alias("sig"))
     )
 
 
@@ -331,27 +331,57 @@ def minhash_bands(
     text_col: str = "text",
     bands: int = LSH_BANDS,
     k: int = MINHASH_K,
+    grams: DataFrame | None = None,
 ) -> DataFrame:
-    """Banded LSH keys per doc: (doc_id, band, bucket)."""
+    """Banded LSH keys per doc: (doc_id, band, bucket). ``grams`` as in
+    ``minhash_signatures``."""
     r = k // bands
-    sig = minhash_signatures(df, id_col, text_col, k)
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(",", *[
-                            F.col("sig")[b * r + j].cast("string")
-                            for j in range(r)
-                        ])
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bucket")
+    sig = minhash_signatures(df, id_col, text_col, k, grams=grams)
+    keys = ", ".join(
+        f"named_struct('band', {b}, 'bucket', md5(concat_ws(',', "
+        + ", ".join(f"CAST(sig[{b * r + j}] AS STRING)" for j in range(r))
+        + ")))"
+        for b in range(bands)
+    )
+    return sig.selectExpr("doc_id", f"inline(array({keys}))")
+
+
+def _bucket_pairs(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_a < doc_b) for every pair sharing a (band, bucket); a pair
+    sharing several buckets repeats."""
+    # pairs generated INSIDE each (band, bucket) group from the sorted
+    # member list — the former bucket-keyed self-join evaluated the
+    # whole shingle->minhash->band subtree TWICE (a broadcast join's
+    # streamed side is not an Exchange, so ReuseExchange never fires)
+    # and needed a separate window pass for the cap; the group form
+    # computes the bands once and the cap is a group-size filter on
+    # the same aggregate. Pair volume is unchanged (quadratic per
+    # bucket, bounded by max_bucket).
+    groups = (
+        banded.groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ms"))
+        .filter(F.size("ms") > 1)
+    )
+    if max_bucket is not None:
+        groups = groups.filter(F.size("ms") <= max_bucket)
+    return groups.select(F.posexplode("ms").alias("i", "doc_a"), "ms").select(
+        "doc_a",
+        F.explode(F.slice("ms", F.col("i") + 2, F.size("ms"))).alias("doc_b"),
+    )
+
+
+def _distinct_pairs(pairs: DataFrame) -> DataFrame:
+    """The candidate partitioning: distinct (doc_a, doc_b) rows hash-
+    partitioned into ``spark.sql.shuffle.partitions``. A pair is 16
+    bytes, so AQE's byte-sized coalescing would fold the whole
+    candidate set — and the CPU-heavy verify that runs in the same
+    stage — into one task (44k pairs, a 1.5 s single task for the
+    benchmark corpus on a 4-vCPU VM; ~4M pairs per 64 MB at scale). A
+    REPARTITION_BY_NUM exchange is never coalesced, and it already
+    clusters the distinct's keys, so it adds no shuffle; the distinct's
+    partial aggregate moves after it (repeated pairs cross the wire)."""
+    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pairs.repartition(n, "doc_a", "doc_b").distinct()
 
 
 def minhash_lsh_candidates(
@@ -373,30 +403,50 @@ def minhash_lsh_candidates(
     incremental state) must not pay it twice."""
     if banded is None:
         banded = minhash_bands(df, id_col, text_col, bands, k)
-    # pairs generated INSIDE each (band, bucket) group from the sorted
-    # member list — the former bucket-keyed self-join evaluated the
-    # whole shingle->minhash->band subtree TWICE (a broadcast join's
-    # streamed side is not an Exchange, so ReuseExchange never fires)
-    # and needed a separate window pass for the cap; the group form
-    # computes the bands once and the cap is a group-size filter on
-    # the same aggregate. Pair volume is unchanged (quadratic per
-    # bucket, bounded by max_bucket).
-    groups = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    if max_bucket is not None:
-        groups = groups.filter(F.size("ms") <= max_bucket)
-    return (
-        groups.select(F.posexplode("ms").alias("i", "doc_a"), "ms")
+    return _distinct_pairs(_bucket_pairs(banded, max_bucket))
+
+
+def verify_candidates(
+    pairs: DataFrame, grams: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate ``pairs`` (doc_a, doc_b; may
+    repeat) against ``doc_gram_sets`` rows: (doc_a, doc_b, jaccard) for
+    every distinct pair at or above ``threshold``.
+
+    Jaccard is computed ONLY for candidate pairs, via array_intersect on
+    the per-doc gram-hash arrays — never the full gram-explode self-join
+    (which blows up quadratically on common shingles and is exactly what
+    LSH exists to avoid at scale). The pairs are spread with the
+    candidate partitioning (``_distinct_pairs``), so the verify runs at
+    full task parallelism."""
+    # grams is CORPUS-sized — never broadcast it (a broadcast of per-doc
+    # gram arrays cannot fit at 100 TB). Shuffle-join the candidate-pair
+    # table against grams on doc id instead: each join shuffles the pair
+    # table + one pass of id-keyed gram arrays, both linear; AQE still
+    # downgrades to a broadcast at test scale when grams is tiny.
+    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("ghs").alias("ga"))
+    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("ghs").alias("gb"))
+    scored = (
+        _distinct_pairs(pairs)
+        .join(ga, "doc_a")
+        .join(gb, "doc_b")
         .select(
             "doc_a",
+            "doc_b",
+            (F.size("ga") + F.size("gb")).alias("n"),
+            # a one-element explode fences the intersection off from the
+            # filter: pushed down, the jaccard predicate would inline it
+            # twice (numerator and union) and intersect every pair twice
             F.explode(
-                F.slice("ms", F.col("i") + 2, F.size("ms"))
-            ).alias("doc_b"),
+                F.array(F.size(F.array_intersect("ga", "gb")))
+            ).alias("inter"),
         )
-        .distinct()
+    )
+    inter = F.col("inter")
+    return (
+        scored.withColumn("jaccard", F.round(inter / (F.col("n") - inter), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -407,37 +457,18 @@ def minhash_dedup(
     text_col: str = "text",
     max_bucket: int | None = None,
     banded: DataFrame | None = None,
+    grams: DataFrame | None = None,
 ) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates → exact-Jaccard verify.
-
-    The verify stage computes Jaccard ONLY for candidate pairs, via
-    array_intersect on the per-doc gram-hash arrays — never the full
-    gram-explode self-join (which blows up quadratically on common
-    shingles and is exactly what LSH exists to avoid at scale).
-    ``banded`` forwards a precomputed band table (see
-    minhash_lsh_candidates)."""
-    cand = minhash_lsh_candidates(
-        df, id_col, text_col, max_bucket=max_bucket, banded=banded
-    )
-    grams = df.select(
-        F.col(id_col).alias("doc_id"),
-        gram_hashes(F.col(text_col)).alias("ghs"),
-    )
-    # grams is CORPUS-sized — never broadcast it (a broadcast of per-doc
-    # gram arrays cannot fit at 100 TB). Shuffle-join the candidate-pair
-    # table against grams on doc id instead: each join shuffles the pair
-    # table + one pass of id-keyed gram arrays, both linear; AQE still
-    # downgrades to a broadcast at test scale when grams is tiny.
-    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("ghs").alias("ga"))
-    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("ghs").alias("gb"))
-    inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
-    union = F.size("ga") + F.size("gb") - inter
-    return (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    """Full near-dup pipeline: LSH candidates → exact-Jaccard verify
+    (``verify_candidates``). ``banded`` forwards a precomputed band
+    table (see minhash_lsh_candidates), ``grams`` a precomputed
+    ``doc_gram_sets`` frame shared by the bands and the verify."""
+    if grams is None:
+        grams = doc_gram_sets(df, id_col, text_col)
+    if banded is None:
+        banded = minhash_bands(df, grams=grams)
+    return verify_candidates(
+        _bucket_pairs(banded, max_bucket), grams, threshold
     )
 
 

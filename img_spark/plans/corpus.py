@@ -19,6 +19,8 @@ Nothing here collects to the driver except the final summary counts.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from img_spark import fsio
@@ -277,6 +279,28 @@ def pages_documents(
     )
 
 
+@contextlib.contextmanager
+def _build_caches():
+    """Yield ``cache(df)``: persist ``df`` for one corpus build unless
+    the caller already cached it. Every frame it persisted is released
+    on ANY exit, so a build that raises leaves nothing cached for the
+    rest of the session, and a caller's cache is never released."""
+    from pyspark import StorageLevel
+
+    held: list = []
+
+    def cache(df: DataFrame) -> DataFrame:
+        if df.storageLevel == StorageLevel.NONE:
+            held.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
+
+    try:
+        yield cache
+    finally:
+        for df in held:
+            df.unpersist()
+
+
 def build_corpus(
     spark: SparkSession,
     checkpoint_dir: str | None,
@@ -320,8 +344,6 @@ def build_corpus(
     ``out_dir`` that already carries a pointer stays versioned
     regardless of the flag (a full rebuild publishes the next
     version). Default False = legacy flat layout (back-compat)."""
-    from pyspark import StorageLevel
-
     from img_spark.operators.textquality import (
         curation_flags,
         lang_id,
@@ -364,81 +386,87 @@ def build_corpus(
                                text_source=text_source)
     else:
         raise ValueError("build_corpus needs checkpoint_dir or documents")
-    # docs feeds ~6 consumers (projection, quality, dedup, optional
-    # decontamination, minhash bands + gram arrays) — without the
-    # persist each would re-read every extracted delta and re-run the
-    # per-page groupBy: ~6 full corpus scans instead of one
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    # quality + lang + tokens: one projection pass over the documents
-    base = docs.withColumns({
-        "lang": lang_id(F.col("text")),
-        "n_tokens": token_count(F.col("text")),
-        "n_chars": F.length("text"),
-    })
-    # the shared curation core (ONE implementation with the
-    # driver-checked curate_corpus gate): quality ∧ ¬dup ∧ ¬contaminated
-    out = base.join(curation_flags(docs, benchmark), "doc_id")
-    comps = None
-    banded = None
-    if near_dup_threshold is not None:
-        from img_spark.operators.dedup import (
-            connected_components,
-            minhash_bands,
-            minhash_dedup,
+    with _build_caches() as cache:
+        # docs feeds ~6 consumers (projection, quality, dedup, optional
+        # decontamination, the gram sets) — without the persist each
+        # would re-read every extracted delta and re-run the per-page
+        # groupBy: ~6 full corpus scans instead of one
+        docs = cache(docs)
+        # quality + lang + tokens: one projection pass over the documents
+        base = docs.withColumns({
+            "lang": lang_id(F.col("text")),
+            "n_tokens": token_count(F.col("text")),
+            "n_chars": F.length("text"),
+        })
+        # the shared curation core (ONE implementation with the
+        # driver-checked curate_corpus gate):
+        # quality ∧ ¬dup ∧ ¬contaminated
+        out = base.join(curation_flags(docs, benchmark), "doc_id")
+        comps = None
+        banded = None
+        if near_dup_threshold is not None:
+            from img_spark.operators.dedup import (
+                connected_components,
+                doc_gram_sets,
+                minhash_bands,
+                minhash_dedup,
+            )
+
+            # shingle once: the gram sets feed the signatures and both
+            # sides of the verify; the band table feeds the LSH
+            # candidates AND the incremental state write
+            grams = cache(doc_gram_sets(docs))
+            banded = cache(minhash_bands(docs, grams=grams))
+            pairs = minhash_dedup(
+                docs, threshold=near_dup_threshold,
+                max_bucket=near_dup_max_bucket, banded=banded, grams=grams,
+            )
+            # comps reads a local checkpoint, not a cache: nothing to
+            # release
+            comps = connected_components(pairs)
+            near = comps.filter(F.col("doc_id") != F.col("rep_id")).select(
+                "doc_id", F.lit(True).alias("is_near_dup")
+            )
+            out = out.join(near, "doc_id", "left").na.fill(
+                {"is_near_dup": False}
+            )
+        else:
+            out = out.withColumn("is_near_dup", F.lit(False))
+        sampled = stratified_sample(
+            base.select("doc_id", "lang"),
+            rates=sample_rates or {},
+            default_rate=default_rate,
+            strat_col="lang",
+        ).select("doc_id", "sampled")
+        out = out.join(sampled, "doc_id").withColumn(
+            "keep",
+            F.col("quality_keep") & ~F.col("is_dup") & ~F.col("is_near_dup")
+            & ~F.col("contaminated") & F.col("sampled"),
         )
 
-        # materialize the band table once: the LSH candidate join AND
-        # the incremental state write both consume it — the minhash
-        # pass is the dominant near-dup CPU and must not run twice
-        banded = minhash_bands(docs).persist(StorageLevel.MEMORY_AND_DISK)
-        pairs = minhash_dedup(
-            docs, threshold=near_dup_threshold,
-            max_bucket=near_dup_max_bucket, banded=banded,
-        )
-        comps = connected_components(pairs)
-        near = comps.filter(F.col("doc_id") != F.col("rep_id")).select(
-            "doc_id", F.lit(True).alias("is_near_dup")
-        )
-        out = out.join(near, "doc_id", "left").na.fill(
-            {"is_near_dup": False}
-        )
-    else:
-        out = out.withColumn("is_near_dup", F.lit(False))
-    sampled = stratified_sample(
-        base.select("doc_id", "lang"),
-        rates=sample_rates or {},
-        default_rate=default_rate,
-        strat_col="lang",
-    ).select("doc_id", "sampled")
-    out = out.join(sampled, "doc_id").withColumn(
-        "keep",
-        F.col("quality_keep") & ~F.col("is_dup") & ~F.col("is_near_dup")
-        & ~F.col("contaminated") & F.col("sampled"),
-    )
+        from pyspark.sql import Observation
 
-    from pyspark.sql import Observation
-
-    obs = Observation("corpus")
-    out = out.observe(
-        obs,
-        F.count("*").alias("documents"),
-        F.count(F.when(F.col("keep"), 1)).alias("kept"),
-        F.count(F.when(F.col("is_dup"), 1)).alias("dups"),
-        F.count(F.when(F.col("is_near_dup"), 1)).alias("near_dups"),
-        F.count(F.when(~F.col("quality_keep"), 1)).alias("quality_dropped"),
-        F.count(F.when(F.col("contaminated"), 1)).alias("contaminated"),
-        F.count(F.when(~F.col("sampled"), 1)).alias("sampled_out"),
-    )
-    out.write.mode("overwrite").partitionBy("lang").parquet(data_dir)
-    if write_state:
-        _write_corpus_state(
-            spark, data_dir, docs, checkpoint_dir,
-            near_dup_threshold, near_dup_max_bucket,
-            banded=banded, comps=comps,
-            sample_rates=sample_rates, default_rate=default_rate,
-            had_benchmark=benchmark is not None,
-            text_source=text_source,
+        obs = Observation("corpus")
+        out = out.observe(
+            obs,
+            F.count("*").alias("documents"),
+            F.count(F.when(F.col("keep"), 1)).alias("kept"),
+            F.count(F.when(F.col("is_dup"), 1)).alias("dups"),
+            F.count(F.when(F.col("is_near_dup"), 1)).alias("near_dups"),
+            F.count(F.when(~F.col("quality_keep"), 1)).alias("quality_dropped"),
+            F.count(F.when(F.col("contaminated"), 1)).alias("contaminated"),
+            F.count(F.when(~F.col("sampled"), 1)).alias("sampled_out"),
         )
+        out.write.mode("overwrite").partitionBy("lang").parquet(data_dir)
+        if write_state:
+            _write_corpus_state(
+                spark, data_dir, docs, checkpoint_dir,
+                near_dup_threshold, near_dup_max_bucket,
+                banded=banded, comps=comps,
+                sample_rates=sample_rates, default_rate=default_rate,
+                had_benchmark=benchmark is not None,
+                text_source=text_source,
+            )
     if version_name is not None:
         # data + state are complete — one atomic pointer write
         # publishes the version, then older versions prune (the one
@@ -446,10 +474,6 @@ def build_corpus(
         _publish_version(out_dir, version_name, keep=cur)
         for fn in legacy_leftover:
             fsio.rmpath(fsio.join(out_dir, fn))
-    docs.unpersist()
-    if banded is not None:
-        banded.unpersist()
-    # comps reads a local checkpoint, not a cache: nothing to unpersist
     return {k: int(v) for k, v in obs.get.items()}
 
 
@@ -730,14 +754,13 @@ def build_corpus_incremental(
     plus ``new_documents``."""
     import json as _json
 
-    from pyspark import StorageLevel
-
     from img_spark.operators.dedup import (
         cap_buckets,
         connected_components,
+        doc_gram_sets,
         fingerprint,
-        gram_hashes,
         minhash_bands,
+        verify_candidates,
     )
     from img_spark.operators.textquality import (
         lang_id,
@@ -812,241 +835,229 @@ def build_corpus_incremental(
     if gmax <= since:
         return {"new_documents": 0, "unchanged": True}
 
-    new_docs = crawl_documents(
-        spark, checkpoint_dir, min_generation=since, text_source=text_source
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    old = spark.read.parquet(src_dir)
+    with _build_caches() as cache:
+        new_docs = cache(crawl_documents(
+            spark, checkpoint_dir, min_generation=since,
+            text_source=text_source,
+        ))
+        old = spark.read.parquet(src_dir)
 
-    # ---- per-doc features for NEW docs only
-    base_new = new_docs.withColumns({
-        "lang": lang_id(F.col("text")),
-        "n_tokens": token_count(F.col("text")),
-        "n_chars": F.length("text"),
-    })
-    q_new = quality_signals(new_docs).select(
-        "doc_id", F.col("keep").alias("quality_keep")
-    )
-    if benchmark is not None:
-        from img_spark.operators.dedup import ngram_decontaminate
-
-        cont_new = ngram_decontaminate(new_docs, benchmark).select(
-            "doc_id", "contaminated"
-        )
-    else:
-        cont_new = new_docs.select(
-            "doc_id", F.lit(False).alias("contaminated")
-        )
-    samp_new = stratified_sample(
-        base_new.select("doc_id", "lang"),
-        rates=sample_rates or {},
-        default_rate=default_rate,
-        strat_col="lang",
-    ).select("doc_id", "sampled")
-
-    # ---- exact-dedup merge against the fingerprint state
-    fstate = spark.read.parquet(fsio.join(st, "fingerprints")).select(
-        "fp", F.col("rep_id").alias("old_rep")
-    )
-    nf = new_docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-    nmin = nf.groupBy("fp").agg(F.min("doc_id").alias("new_min"))
-    merged = nmin.join(fstate, "fp", "left").withColumn(
-        "rep", F.least(F.coalesce("old_rep", "new_min"), F.col("new_min"))
-    ).persist()
-    dup_new = nf.join(merged.select("fp", "rep"), "fp").select(
-        "doc_id", (F.col("doc_id") != F.col("rep")).alias("is_dup")
-    )
-    # the ONLY old rows exact dedup can flip: previous reps demoted by
-    # a smaller new id
-    dup_flips = merged.filter(
-        F.col("old_rep").isNotNull() & (F.col("new_min") < F.col("old_rep"))
-    ).select(F.col("old_rep").alias("doc_id"), F.lit(True).alias("__dup"))
-    fstate_out = (
-        fstate.join(nmin, "fp", "left")
-        .select(
-            "fp",
-            F.least(
-                F.col("old_rep"), F.coalesce("new_min", "old_rep")
-            ).alias("rep_id"),
-        )
-        .unionByName(
-            nmin.join(fstate, "fp", "left_anti").select(
-                "fp", F.col("new_min").alias("rep_id")
-            )
-        )
-    )
-
-    # ---- near-dup merge against the band + cluster state
-    comps_all = None
-    bands_out = None
-    if thr is not None:
-        bstate = spark.read.parquet(fsio.join(st, "bands"))
-        bnew = minhash_bands(new_docs).persist(StorageLevel.MEMORY_AND_DISK)
-        allb = bstate.unionByName(bnew)
-        if cap is not None:
-            allb = cap_buckets(allb, ("band", "bucket"), cap)
-        # candidate pairs with ≥1 NEW member (old-old pairs are already
-        # folded into the stored assignments)
-        raw = (
-            allb.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-            .join(
-                bnew.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            .filter(F.col("doc_a") != F.col("doc_b"))
-            .select(
-                F.least("doc_a", "doc_b").alias("doc_a"),
-                F.greatest("doc_a", "doc_b").alias("doc_b"),
-            )
-            .distinct()
-        )
-        # verify stage: gram arrays ONLY for docs in candidate pairs —
-        # new docs from the new batch, old docs re-shingled from the
-        # corpus text (candidate-sized, not corpus-sized)
-        ids = raw.select(F.col("doc_a").alias("doc_id")).unionByName(
-            raw.select(F.col("doc_b").alias("doc_id"))
-        ).distinct()
-        texts = (
-            new_docs.select("doc_id", "text")
-            .unionByName(old.select("doc_id", "text"))
-            .join(ids, "doc_id", "left_semi")
-        )
-        grams = texts.select(
-            "doc_id", gram_hashes(F.col("text")).alias("ghs")
-        )
-        ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("ghs").alias("ga"))
-        gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("ghs").alias("gb"))
-        inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
-        union_sz = F.size("ga") + F.size("gb") - inter
-        new_pairs = (
-            raw.join(ga, "doc_a").join(gb, "doc_b")
-            .withColumn("jaccard", F.round(inter / union_sz, 6))
-            .filter(F.col("jaccard") >= thr)
-            .select("doc_a", "doc_b")
-        )
-        cstate = spark.read.parquet(fsio.join(st, "comps"))
-        # a REVISITED doc's text changed: its stored star edge
-        # (doc → old cluster rep) describes the old text — drop it so
-        # the new text is clustered on its own merits (its new bands
-        # re-join if still similar). Rep-side edges stay: the other
-        # members are still near-dups of each other and the rep id is
-        # just their cluster label (conservative: a changed REP keeps
-        # anchoring its old cluster — see the docstring's revisit
-        # caveat).
-        old_edges = cstate.join(
-            new_docs.select("doc_id"), "doc_id", "left_anti"
-        ).select(
-            F.col("doc_id").alias("doc_a"), F.col("rep_id").alias("doc_b")
-        )
-        comps_all = connected_components(
-            new_pairs.unionByName(old_edges)
-        )
-        bands_out = bstate.unionByName(bnew)
-    near_set = (
-        comps_all.filter(F.col("doc_id") != F.col("rep_id")).select(
-            "doc_id", F.lit(True).alias("__near")
-        )
-        if comps_all is not None
-        else spark.createDataFrame([], "doc_id string, __near boolean")
-    )
-
-    # ---- assemble: old rows (monotone flag flips only) + new rows.
-    # A REVISITED doc appears in new_docs with fresh text — its new
-    # row REPLACES the old one (anti-join), never duplicates it.
-    old_out = (
-        old.join(new_docs.select("doc_id"), "doc_id", "left_anti")
-        .join(F.broadcast(dup_flips), "doc_id", "left")
-        .join(near_set, "doc_id", "left")
-        .withColumns({
-            "is_dup": F.col("is_dup") | F.coalesce("__dup", F.lit(False)),
-            "is_near_dup":
-                F.col("is_near_dup") | F.coalesce("__near", F.lit(False)),
+        # ---- per-doc features for NEW docs only
+        base_new = new_docs.withColumns({
+            "lang": lang_id(F.col("text")),
+            "n_tokens": token_count(F.col("text")),
+            "n_chars": F.length("text"),
         })
-        .drop("__dup", "__near")
-    )
-    new_out = (
-        base_new.join(q_new, "doc_id")
-        .join(dup_new, "doc_id")
-        .join(cont_new, "doc_id")
-        .join(near_set, "doc_id", "left")
-        .withColumn("is_near_dup", F.coalesce("__near", F.lit(False)))
-        .drop("__near")
-        .join(samp_new, "doc_id")
-    )
-    cols = [c for c in old.columns if c != "keep"]
-    result = (
-        old_out.select(*cols, "keep").unionByName(
-            new_out.withColumn("keep", F.lit(False)).select(*cols, "keep")
+        q_new = quality_signals(new_docs).select(
+            "doc_id", F.col("keep").alias("quality_keep")
         )
-        .withColumn(
-            "keep",
-            F.col("quality_keep") & ~F.col("is_dup") & ~F.col("is_near_dup")
-            & ~F.col("contaminated") & F.col("sampled"),
-        )
-    )
+        if benchmark is not None:
+            from img_spark.operators.dedup import ngram_decontaminate
 
-    from pyspark.sql import Observation
+            cont_new = ngram_decontaminate(new_docs, benchmark).select(
+                "doc_id", "contaminated"
+            )
+        else:
+            cont_new = new_docs.select(
+                "doc_id", F.lit(False).alias("contaminated")
+            )
+        samp_new = stratified_sample(
+            base_new.select("doc_id", "lang"),
+            rates=sample_rates or {},
+            default_rate=default_rate,
+            strat_col="lang",
+        ).select("doc_id", "sampled")
 
-    obs = Observation("corpus-incr")
-    result = result.observe(
-        obs,
-        F.count("*").alias("documents"),
-        F.count(F.when(F.col("keep"), 1)).alias("kept"),
-        F.count(F.when(F.col("is_dup"), 1)).alias("dups"),
-        F.count(F.when(F.col("is_near_dup"), 1)).alias("near_dups"),
-        F.count(F.when(~F.col("quality_keep"), 1)).alias("quality_dropped"),
-        F.count(F.when(F.col("contaminated"), 1)).alias("contaminated"),
-        F.count(F.when(~F.col("sampled"), 1)).alias("sampled_out"),
-        F.count(F.when(F.col("generation") > since, 1)).alias("new_documents"),
-    )
-    # the write READS the old corpus (flag flips ride the old rows),
-    # so it cannot overwrite the live data in place. Versioned layout:
-    # the new version dir IS the write target and the pointer swap is
-    # the publish. Legacy: tmp dir + rename-aside swap. State lands
-    # inside the new dir BEFORE the publish — its reads also come from
-    # the old state, and after the swap the new corpus carries its own.
-    legacy_leftover: list = []
-    if cur:
-        new_name = f"corpus_v{int(cur[8:]) + 1}"
-        tmp = fsio.join(out_dir, new_name)
-    elif versioned:
-        # migrate the legacy flat corpus to the versioned layout in
-        # this rewrite (``--curate-versioned`` must not be silently
-        # ignored just because the corpus predates the flag): the new
-        # version is written beside the flat data, the pointer
-        # publishes it, and the superseded flat entries are pruned —
-        # a mixed root would corrupt legacy readers forever
-        new_name = "corpus_v1"
-        tmp = fsio.join(out_dir, new_name)
-        legacy_leftover = _legacy_entries(out_dir)
-    else:
-        new_name = None
-        tmp = out_dir.rstrip("/") + "__incr_tmp"
-    fsio.rmtree(tmp)
-    result.write.mode("overwrite").partitionBy("lang").parquet(tmp)
-    stt = _state_dir(tmp)
-    fstate_out.write.mode("overwrite").parquet(
-        fsio.join(stt, "fingerprints")
-    )
-    if thr is not None:
-        bands_out.write.mode("overwrite").parquet(fsio.join(stt, "bands"))
-        comps_all.select("doc_id", "rep_id").write.mode("overwrite").parquet(
-            fsio.join(stt, "comps")
+        # ---- exact-dedup merge against the fingerprint state
+        fstate = spark.read.parquet(fsio.join(st, "fingerprints")).select(
+            "fp", F.col("rep_id").alias("old_rep")
         )
-        bnew.unpersist()
-    fsio.write_bytes_atomic(
-        fsio.join(stt, "meta.json"),
-        _json.dumps({
-            "max_generation": gmax,
-            "near_dup_threshold": thr,
-            "near_dup_max_bucket": cap,
-            "sample_rates": sample_rates or {},
-            "default_rate": default_rate,
-            "had_benchmark": benchmark is not None,
-            "text_source": text_source,
-        }).encode(),
-    )
-    merged.unpersist()
-    new_docs.unpersist()
+        nf = new_docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
+        nmin = nf.groupBy("fp").agg(F.min("doc_id").alias("new_min"))
+        merged = cache(nmin.join(fstate, "fp", "left").withColumn(
+            "rep", F.least(F.coalesce("old_rep", "new_min"), F.col("new_min"))
+        ))
+        dup_new = nf.join(merged.select("fp", "rep"), "fp").select(
+            "doc_id", (F.col("doc_id") != F.col("rep")).alias("is_dup")
+        )
+        # the ONLY old rows exact dedup can flip: previous reps demoted by
+        # a smaller new id
+        dup_flips = merged.filter(
+            F.col("old_rep").isNotNull() & (F.col("new_min") < F.col("old_rep"))
+        ).select(F.col("old_rep").alias("doc_id"), F.lit(True).alias("__dup"))
+        fstate_out = (
+            fstate.join(nmin, "fp", "left")
+            .select(
+                "fp",
+                F.least(
+                    F.col("old_rep"), F.coalesce("new_min", "old_rep")
+                ).alias("rep_id"),
+            )
+            .unionByName(
+                nmin.join(fstate, "fp", "left_anti").select(
+                    "fp", F.col("new_min").alias("rep_id")
+                )
+            )
+        )
+
+        # ---- near-dup merge against the band + cluster state
+        comps_all = None
+        bands_out = None
+        if thr is not None:
+            bstate = spark.read.parquet(fsio.join(st, "bands"))
+            # the new docs are shingled once, for their bands and the verify
+            gnew = cache(doc_gram_sets(new_docs))
+            bnew = cache(minhash_bands(new_docs, grams=gnew))
+            allb = bstate.unionByName(bnew)
+            if cap is not None:
+                allb = cap_buckets(allb, ("band", "bucket"), cap)
+            # candidate pairs with ≥1 NEW member (old-old pairs are already
+            # folded into the stored assignments)
+            raw = (
+                allb.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
+                .join(
+                    bnew.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
+                    ["band", "bucket"],
+                )
+                .filter(F.col("doc_a") != F.col("doc_b"))
+                .select(
+                    F.least("doc_a", "doc_b").alias("doc_a"),
+                    F.greatest("doc_a", "doc_b").alias("doc_b"),
+                )
+            )
+            # verify stage: gram sets ONLY for docs in candidate pairs —
+            # new docs' from gnew, old docs re-shingled from the corpus
+            # text (candidate-sized, not corpus-sized)
+            ids = raw.select(F.col("doc_a").alias("doc_id")).unionByName(
+                raw.select(F.col("doc_b").alias("doc_id"))
+            ).distinct()
+            grams = gnew.unionByName(doc_gram_sets(old)).join(
+                ids, "doc_id", "left_semi"
+            )
+            new_pairs = verify_candidates(raw, grams, thr).select(
+                "doc_a", "doc_b"
+            )
+            cstate = spark.read.parquet(fsio.join(st, "comps"))
+            # a REVISITED doc's text changed: its stored star edge
+            # (doc → old cluster rep) describes the old text — drop it so
+            # the new text is clustered on its own merits (its new bands
+            # re-join if still similar). Rep-side edges stay: the other
+            # members are still near-dups of each other and the rep id is
+            # just their cluster label (conservative: a changed REP keeps
+            # anchoring its old cluster — see the docstring's revisit
+            # caveat).
+            old_edges = cstate.join(
+                new_docs.select("doc_id"), "doc_id", "left_anti"
+            ).select(
+                F.col("doc_id").alias("doc_a"), F.col("rep_id").alias("doc_b")
+            )
+            comps_all = connected_components(
+                new_pairs.unionByName(old_edges)
+            )
+            bands_out = bstate.unionByName(bnew)
+        near_set = (
+            comps_all.filter(F.col("doc_id") != F.col("rep_id")).select(
+                "doc_id", F.lit(True).alias("__near")
+            )
+            if comps_all is not None
+            else spark.createDataFrame([], "doc_id string, __near boolean")
+        )
+
+        # ---- assemble: old rows (monotone flag flips only) + new rows.
+        # A REVISITED doc appears in new_docs with fresh text — its new
+        # row REPLACES the old one (anti-join), never duplicates it.
+        old_out = (
+            old.join(new_docs.select("doc_id"), "doc_id", "left_anti")
+            .join(F.broadcast(dup_flips), "doc_id", "left")
+            .join(near_set, "doc_id", "left")
+            .withColumns({
+                "is_dup": F.col("is_dup") | F.coalesce("__dup", F.lit(False)),
+                "is_near_dup":
+                    F.col("is_near_dup") | F.coalesce("__near", F.lit(False)),
+            })
+            .drop("__dup", "__near")
+        )
+        new_out = (
+            base_new.join(q_new, "doc_id")
+            .join(dup_new, "doc_id")
+            .join(cont_new, "doc_id")
+            .join(near_set, "doc_id", "left")
+            .withColumn("is_near_dup", F.coalesce("__near", F.lit(False)))
+            .drop("__near")
+            .join(samp_new, "doc_id")
+        )
+        cols = [c for c in old.columns if c != "keep"]
+        result = (
+            old_out.select(*cols, "keep").unionByName(
+                new_out.withColumn("keep", F.lit(False)).select(*cols, "keep")
+            )
+            .withColumn(
+                "keep",
+                F.col("quality_keep") & ~F.col("is_dup") & ~F.col("is_near_dup")
+                & ~F.col("contaminated") & F.col("sampled"),
+            )
+        )
+
+        from pyspark.sql import Observation
+
+        obs = Observation("corpus-incr")
+        result = result.observe(
+            obs,
+            F.count("*").alias("documents"),
+            F.count(F.when(F.col("keep"), 1)).alias("kept"),
+            F.count(F.when(F.col("is_dup"), 1)).alias("dups"),
+            F.count(F.when(F.col("is_near_dup"), 1)).alias("near_dups"),
+            F.count(F.when(~F.col("quality_keep"), 1)).alias("quality_dropped"),
+            F.count(F.when(F.col("contaminated"), 1)).alias("contaminated"),
+            F.count(F.when(~F.col("sampled"), 1)).alias("sampled_out"),
+            F.count(F.when(F.col("generation") > since, 1)).alias("new_documents"),
+        )
+        # the write READS the old corpus (flag flips ride the old rows),
+        # so it cannot overwrite the live data in place. Versioned layout:
+        # the new version dir IS the write target and the pointer swap is
+        # the publish. Legacy: tmp dir + rename-aside swap. State lands
+        # inside the new dir BEFORE the publish — its reads also come from
+        # the old state, and after the swap the new corpus carries its own.
+        legacy_leftover: list = []
+        if cur:
+            new_name = f"corpus_v{int(cur[8:]) + 1}"
+            tmp = fsio.join(out_dir, new_name)
+        elif versioned:
+            # migrate the legacy flat corpus to the versioned layout in
+            # this rewrite (``--curate-versioned`` must not be silently
+            # ignored just because the corpus predates the flag): the new
+            # version is written beside the flat data, the pointer
+            # publishes it, and the superseded flat entries are pruned —
+            # a mixed root would corrupt legacy readers forever
+            new_name = "corpus_v1"
+            tmp = fsio.join(out_dir, new_name)
+            legacy_leftover = _legacy_entries(out_dir)
+        else:
+            new_name = None
+            tmp = out_dir.rstrip("/") + "__incr_tmp"
+        fsio.rmtree(tmp)
+        result.write.mode("overwrite").partitionBy("lang").parquet(tmp)
+        stt = _state_dir(tmp)
+        fstate_out.write.mode("overwrite").parquet(
+            fsio.join(stt, "fingerprints")
+        )
+        if thr is not None:
+            bands_out.write.mode("overwrite").parquet(fsio.join(stt, "bands"))
+            comps_all.select("doc_id", "rep_id").write.mode("overwrite").parquet(
+                fsio.join(stt, "comps")
+            )
+        fsio.write_bytes_atomic(
+            fsio.join(stt, "meta.json"),
+            _json.dumps({
+                "max_generation": gmax,
+                "near_dup_threshold": thr,
+                "near_dup_max_bucket": cap,
+                "sample_rates": sample_rates or {},
+                "default_rate": default_rate,
+                "had_benchmark": benchmark is not None,
+                "text_source": text_source,
+            }).encode(),
+        )
     if new_name is not None:
         # versioned publish: data + state are complete at corpus_v{N+1}
         # — one atomic pointer write flips readers over, then versions

@@ -707,6 +707,29 @@ def test_hot_bucket_guard_bounds_work_and_reports(spark):
     assert all(r["doc_a"] >= 100 for r in sim)
 
 
+def test_lsh_candidates_keep_shuffle_partitions(spark):
+    """The candidate pairs keep spark.sql.shuffle.partitions partitions
+    through a REPARTITION_BY_NUM exchange: AQE sizes partitions by
+    bytes, and would otherwise fold the 16-byte pairs — and the
+    array_intersect verify behind them — into one task."""
+    import re
+
+    rows = [(i, f"shared words for every doc variant {i % 4} of {i % 3}")
+            for i in range(40)]
+    docs_df = spark.createDataFrame(rows, "doc_id long, text string")
+    cand = dedup.minhash_lsh_candidates(docs_df)
+    assert cand.collect()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1
+    assert cand.rdd.getNumPartitions() == n
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert re.search(
+        rf"Exchange hashpartitioning\(doc_a#\d+L?, doc_b#\d+L?, {n}\), "
+        r"REPARTITION_BY_NUM", plan
+    ), plan
+
+
 def test_null_text_docs_excluded_from_lsh_by_design(spark):
     """Pinned behavior (round-2 advice): NULL-text docs emit no
     signature row and never reach candidate pairs; empty-STRING docs

@@ -84,6 +84,34 @@ def test_percent_encode_expr_matches_python(spark, strings):
     }
 
 
+_DOC_TEXTS = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), max_size=7)
+    .map(" ".join),
+)
+
+
+@given(st.lists(_DOC_TEXTS, max_size=10))
+@settings(max_examples=15, deadline=None)
+def test_minhash_dedup_shared_gram_sets_same_pairs(spark, texts):
+    """Passing a precomputed ``doc_gram_sets`` frame to minhash_dedup
+    finds exactly the pairs it finds shingling the text itself, NULL
+    and empty texts included."""
+    from img_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+
+    def pairs(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    assert pairs(
+        dedup.minhash_dedup(df, grams=dedup.doc_gram_sets(df))
+    ) == pairs(dedup.minhash_dedup(df))
+
+
 @given(URL_CHARS)
 @settings(max_examples=200, deadline=None)
 def test_check_host_contains_dot(addr):
